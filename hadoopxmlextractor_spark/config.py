@@ -4,8 +4,10 @@ The reference's "query" is a Hadoop resource XML file whose properties
 declare per-element extraction rules (grammar:
 reference ``README.md:164-252``, parser
 ``SeqXmlRecordReader.java:71-115``). This module parses the same grammar
-into plain dataclasses; expression compilation is left to Catalyst
-(``F.xpath`` compiles XPath JVM-side once per stage).
+into plain dataclasses and rejects a config the reference job would
+fail on (missing properties, an XPath order outside the output
+columns) with a ``ValueError``. XPath compilation happens in
+``extract.extract_cells``.
 """
 
 from __future__ import annotations
@@ -73,6 +75,18 @@ class ExtractionConfig:
     sort_order_delimiter: str = "#"
     column_names: tuple[str, ...] = field(default=())
 
+    def __post_init__(self) -> None:
+        # The reference assigns theColumns[order] (XmlExtractor.java:155),
+        # which fails on an order outside the column array; a silently
+        # empty result would hide the misconfiguration.
+        for rule in self.rules:
+            for xp in rule.xpaths:
+                if not 0 <= xp.order < self.nr_of_columns:
+                    raise ValueError(
+                        f"rule '{rule.name}': xpath order {xp.order} ({xp.expr}) is "
+                        f"outside [0, {self.nr_of_columns}) set by xmlextractor.nr_of_columns"
+                    )
+
     def output_columns(self) -> list[str]:
         """Column names for the assembled output (c0..cN-1 unless named)."""
         if self.column_names:
@@ -131,13 +145,19 @@ class ExtractionConfig:
             if name_el is None or value_el is None:
                 continue
             props[(name_el.text or "").strip()] = value_el.text or ""
+
+        def required(key: str) -> str:
+            if key not in props:
+                raise ValueError(f"config lacks the property {key!r}")
+            return props[key]
+
         delimiter = props.get("xmlextractor.delimiter_string", ";")
         sort_delim = props.get("xmlextractor.sort_order_delimiter_string", "#")
         out_delim = props.get("xmlextractor.output_delimiter_string", ";")
-        nr_of_columns = int(props["xmlextractor.nr_of_columns"])
-        node_names = [n for n in props["xmlextractor.nodes"].split(delimiter) if n.strip()]
+        nr_of_columns = int(required("xmlextractor.nr_of_columns"))
+        node_names = [n for n in required("xmlextractor.nodes").split(delimiter) if n.strip()]
         rules = tuple(
-            cls.parse_rule(n, props[n], delimiter, sort_delim) for n in node_names
+            cls.parse_rule(n, required(n), delimiter, sort_delim) for n in node_names
         )
         return cls(
             rules=rules,

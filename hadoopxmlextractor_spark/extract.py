@@ -1,136 +1,161 @@
-"""The extraction pipeline: documents → fragments → cells → output rows.
+"""The extraction pipeline: documents → cells → output rows.
 
 Spark-first restatement of the reference's fixed physical plan
 (scan → scan-time filter → fragment project → XPath project → shuffle/sort
 → ordered pivot + forward fill → sink; ``XmlExtractor.java:178-212``):
 
 1. **Scan** — whole-document rows (``sources.read_xml_documents``).
-2. **Fragment extraction** — Arrow-batched ``mapInPandas`` running the
-   pure-Python multi-pattern scanner (``scanner.py``); the attribute
-   predicate and the include-children truncation happen here, *before*
-   any XML parsing — the same filter/projection pushdown the reference
-   hand-rolls in its RecordReader (``SeqXmlRecordReader.java:259-273``).
-   Exploding fragments out of documents early also breaks the
-   one-giant-document-per-task skew the reference inherits from its
-   non-splittable input format.
-3. **XPath projection** — JVM-side ``xpath()`` (whole-stage codegen,
-   no Python round-trip) evaluated per fragment, gated by rule index;
-   multi-node results concatenate with no separator and empty nodesets
-   drop the cell, matching ``XmlExtractor.java:100-112``.
+2. **Fragment scan, parse and project** — one Arrow-batched
+   ``mapInPandas`` pass. The pure-Python multi-pattern scanner
+   (``scanner.py``) applies the attribute predicate and the
+   include-children truncation *before* any XML parsing — the same
+   filter/projection pushdown the reference hand-rolls in its
+   RecordReader (``SeqXmlRecordReader.java:259-273``). Each fragment is
+   then parsed once with ``ET.fromstring`` (C expat); a fragment that
+   fails to parse is dropped silently, like the reference's swallowed
+   exceptions (``XmlExtractor.java:114-126``). Every XPath the
+   ``xpath_subset`` compiler accepts is evaluated on that tree, as the
+   reference evaluates a rule's XPath list on one DOM
+   (``XmlExtractor.java:84-102``).
+3. **JVM XPath projection** — only for XPaths outside the subset: the
+   pass also emits each parsed fragment of a rule that has such XPaths,
+   and a JVM-side ``xpath()`` evaluates just those XPaths on it, gated
+   by rule index. This stage is absent from the plan when every XPath
+   is in the subset.
 4. **Assembly** — ``operators.assembly.assemble_rows``: one shuffle
    (partition by doc, sort by (seq, order)), running forward fill,
    trigger-gated emit.
 
-At scale: the only Python stage is the scanner (string find over opaque
-documents — work Spark's built-ins cannot express); everything after the
-fragment DataFrame is built-in Catalyst-optimizable operators, and the
-plan has exactly one shuffle, keyed on the high-cardinality doc_id.
+In both projections several matched nodes concatenate with no separator
+and an empty nodeset drops the cell (``XmlExtractor.java:100-112``).
+The plan has exactly one shuffle, keyed on the high-cardinality doc_id.
 """
 
 from __future__ import annotations
 
-from typing import Iterator
+import xml.etree.ElementTree as ET
+from typing import Callable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from hadoopxmlextractor_spark.config import ExtractionConfig
+from hadoopxmlextractor_spark import xpath_subset
+from hadoopxmlextractor_spark.config import ExtractionConfig, XPathSpec
 from hadoopxmlextractor_spark.operators.assembly import assemble_rows
-from hadoopxmlextractor_spark.scanner import compile_rules, scan_document
+from hadoopxmlextractor_spark.scanner import CompiledRule, Fragment, compile_rules, scan_document
 
-_FRAGMENT_SCHEMA = "doc_id string, seq long, rule_idx int, fragment string"
+_CELL_COLUMNS = {"doc_id": "object", "seq": "int64", "order": "Int32", "value": "object"}
+_ROUTED_COLUMNS = {**_CELL_COLUMNS, "rule_idx": "Int32", "fragment": "object"}
+_ERROR_COLUMNS = {
+    "doc_id": "object", "seq": "int64", "rule": "object", "error": "object", "snippet": "object",
+}
 
 
-def extract_fragments(
-    docs: DataFrame, config: ExtractionConfig, *, validate: bool = True
-) -> DataFrame:
-    """documents(doc_id, content) → fragments(doc_id, seq, rule_idx, fragment).
+def _spark_schema(columns: dict[str, str]) -> str:
+    types = {"object": "string", "int64": "long", "Int32": "int"}
+    return ", ".join(f"{name} {types[dtype]}" for name, dtype in columns.items())
 
-    The compiled rule tables are tiny and ship in the task closure (the
-    reference compiles them once per map task,
-    ``SeqXmlRecordReader.java:117-141``; here once per Python worker).
+
+def _frame(rows: list[tuple], columns: dict[str, str]) -> pd.DataFrame:
+    return pd.DataFrame.from_records(rows, columns=list(columns)).astype(columns)
+
+
+def _parse_fragments(
+    pdf: pd.DataFrame, compiled: tuple[CompiledRule, ...]
+) -> Iterator[tuple[str, Fragment, ET.Element | None, str | None]]:
+    """Scan every document of a batch and parse each fragment once.
+
+    Yields ``(doc_id, fragment, tree, error)``: ``tree`` is the parsed
+    fragment, or None with the parser's message in ``error``.
     """
-    compiled = compile_rules(config.rules)
-
-    def scan_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            doc_ids: list[str] = []
-            seqs: list[int] = []
-            rule_idxs: list[int] = []
-            frags: list[str] = []
-            for doc_id, content in zip(pdf["doc_id"], pdf["content"]):
-                if content is None:
-                    continue
-                for frag in scan_document(content, compiled, validate=validate):
-                    doc_ids.append(doc_id)
-                    seqs.append(frag.seq)
-                    rule_idxs.append(frag.rule_idx)
-                    frags.append(frag.xml)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(doc_ids, dtype="object"),
-                    "seq": pd.Series(seqs, dtype="int64"),
-                    "rule_idx": pd.Series(rule_idxs, dtype="int32"),
-                    "fragment": pd.Series(frags, dtype="object"),
-                }
-            )
-
-    return docs.mapInPandas(scan_batches, schema=_FRAGMENT_SCHEMA)
+    for doc_id, content in zip(pdf["doc_id"], pdf["content"]):
+        if content is None:
+            continue
+        for frag in scan_document(content, compiled, validate=False):
+            try:
+                tree = ET.fromstring(frag.xml)
+            except ET.ParseError as e:
+                yield doc_id, frag, None, str(e)
+            else:
+                yield doc_id, frag, tree, None
 
 
 def _xpath_array(col: str, expr: str):
     """JVM-side xpath(col, expr) → array<string> of node string values.
 
-    Subset-shaped expressions are normalized so the general path shares
-    the fused path's semantics: namespace prefixes stripped (Spark's
-    xpath matches a *prefixed* step against nothing; an unprefixed step
-    already matches by local name in any namespace) and bare element
-    terminals rewritten to their subtree text nodes (Hive's xpath
-    yields null for element nodes; see ``xpath_subset`` docstring for
-    the reference's "null"-string defect this deliberately fixes).
+    Subset-shaped expressions are normalized to the subset evaluators'
+    semantics: namespace prefixes stripped (Spark's xpath matches a
+    *prefixed* step against nothing; an unprefixed step already matches
+    by local name in any namespace) and bare element terminals rewritten
+    to their subtree text nodes (Hive's xpath yields null for element
+    nodes; see ``xpath_subset`` docstring for the reference's
+    "null"-string defect this deliberately fixes).
     """
-    from hadoopxmlextractor_spark.xpath_subset import normalize_for_jvm
-
-    return F.xpath(F.col(col), F.lit(normalize_for_jvm(expr)))
+    return F.xpath(F.col(col), F.lit(xpath_subset.normalize_for_jvm(expr)))
 
 
-def project_cells(fragments: DataFrame, config: ExtractionConfig) -> DataFrame:
-    """fragments → cells(doc_id, seq, order, value): the XPath projection.
+def extract_cells(docs: DataFrame, config: ExtractionConfig) -> DataFrame:
+    """documents(doc_id, content) → cells(doc_id, seq, order, value), the
+    long-format shuffle data shape (``XmlReducerKeyWritable.java:17-25``).
 
-    One cell per (fragment, xpath) pair whose nodeset is non-empty; all
-    matched nodes' string values concatenate with no separator
-    (``XmlExtractor.java:104-109``). Evaluation is gated by ``rule_idx``
-    so a rule's expressions never run against another rule's fragments
-    (preserves the reference's per-rule projection attachment,
-    ``SeqXmlRecordReader.java:190``).
+    Routing is per XPath: ``xpath_subset.compile_subset`` decides on the
+    driver which XPaths the Python pass evaluates; the rest go to the
+    JVM ``xpath()``. The compiled rule tables and evaluators are tiny and
+    ship in the task closure (the reference compiles them once per map
+    task, ``SeqXmlRecordReader.java:117-141``; here once per Python
+    worker).
     """
-    cells_for_rule = [
-        F.array(
-            *[
-                F.struct(
-                    F.lit(xp.order).alias("order"),
-                    _xpath_array("fragment", xp.expr).alias("nodes"),
-                )
-                for xp in rule.xpaths
-            ]
-        )
-        for rule in config.rules
-    ]
-    gated = None
-    for i, arr in enumerate(cells_for_rule):
-        gated = (F.when(F.col("rule_idx") == i, arr) if gated is None
-                 else gated.when(F.col("rule_idx") == i, arr))
+    compiled = compile_rules(config.rules)
+    in_subset: list[list[tuple[int, Callable[[ET.Element], str | None]]]] = []
+    on_jvm: list[list[XPathSpec]] = []
+    for rule in config.rules:
+        evaluators = [(xp, xpath_subset.compile_subset(xp.expr)) for xp in rule.xpaths]
+        in_subset.append([(xp.order, ev) for xp, ev in evaluators if ev is not None])
+        on_jvm.append([xp for xp, ev in evaluators if ev is None])
+    columns = _ROUTED_COLUMNS if any(on_jvm) else _CELL_COLUMNS
+    no_fragment = (None,) * (len(columns) - len(_CELL_COLUMNS))
 
+    def scan_project(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows: list[tuple] = []
+            for doc_id, frag, tree, _ in _parse_fragments(pdf, compiled):
+                if tree is None:
+                    continue  # silent drop, XmlExtractor.java:114-126
+                for order, ev in in_subset[frag.rule_idx]:
+                    value = ev(tree)
+                    if value is not None:  # empty nodeset → no cell, XmlExtractor.java:104
+                        rows.append((doc_id, frag.seq, order, value) + no_fragment)
+                if on_jvm[frag.rule_idx]:
+                    rows.append((doc_id, frag.seq, None, None, frag.rule_idx, frag.xml))
+            yield _frame(rows, columns)
+
+    cells = docs.mapInPandas(scan_project, schema=_spark_schema(columns))
+    if columns is _CELL_COLUMNS:
+        return cells
+
+    # A row with a rule_idx carries a fragment; the others already are
+    # cells and pass through as one-node arrays.
+    projected = F.when(
+        F.col("rule_idx").isNull(),
+        F.array(F.struct("order", F.array("value").alias("nodes"))),
+    )
+    for i, xpaths in enumerate(on_jvm):
+        if xpaths:
+            projected = projected.when(
+                F.col("rule_idx") == i,
+                F.array(*[
+                    F.struct(
+                        F.lit(xp.order).alias("order"),
+                        _xpath_array("fragment", xp.expr).alias("nodes"),
+                    )
+                    for xp in xpaths
+                ]),
+            )
     return (
-        fragments.select(
-            "doc_id",
-            "seq",
-            F.explode(gated).alias("cell"),
-        )
-        # Empty nodeset → no cell (mirrors the `if (nodes.getLength() > 0)`
-        # guard at XmlExtractor.java:104); an empty *string value* of a
-        # matched node still emits.
+        cells.select("doc_id", "seq", F.explode(projected).alias("cell"))
+        # Empty nodeset → no cell; an empty *string value* of a matched
+        # node still emits.
         .filter(F.size("cell.nodes") > 0)
         .select(
             "doc_id",
@@ -141,103 +166,11 @@ def project_cells(fragments: DataFrame, config: ExtractionConfig) -> DataFrame:
     )
 
 
-_CELL_SCHEMA = "doc_id string, seq long, order int, value string"
-
-
-def _compile_fused(config: ExtractionConfig):
-    """Per-rule list of (order, evaluator) if ALL xpaths are in the fast
-    subset, else None (→ general JVM xpath path)."""
-    from hadoopxmlextractor_spark.xpath_subset import compile_subset
-
-    per_rule = []
-    for rule in config.rules:
-        evs = []
-        for xp in rule.xpaths:
-            ev = compile_subset(xp.expr)
-            if ev is None:
-                return None
-            evs.append((xp.order, ev))
-        per_rule.append(evs)
-    return per_rule
-
-
-def extract_cells_fused(docs: DataFrame, config: ExtractionConfig) -> DataFrame:
-    """Fused scan + parse + project in one Arrow-batched Python pass.
-
-    One ``ET.fromstring`` per fragment (C expat, ~µs) feeds both
-    validation and projection — vs. the general path's per-(row, expr)
-    javax XPath evaluation (~ms) on the JVM. ~40× faster end-to-end on
-    the extraction benchmark; used automatically when every configured
-    XPath is in the supported subset (see ``xpath_subset``).
-    """
-    import xml.etree.ElementTree as ET
-
-    per_rule = _compile_fused(config)
-    if per_rule is None:
-        raise ValueError("config contains XPath outside the fused subset")
-    compiled = compile_rules(config.rules)
-
-    def scan_project(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            doc_ids: list[str] = []
-            seqs: list[int] = []
-            orders: list[int] = []
-            values: list[str] = []
-            for doc_id, content in zip(pdf["doc_id"], pdf["content"]):
-                if content is None:
-                    continue
-                for frag in scan_document(content, compiled, validate=False):
-                    try:
-                        tree = ET.fromstring(frag.xml)
-                    except ET.ParseError:
-                        continue  # silent drop, XmlExtractor.java:114-126
-                    for order, ev in per_rule[frag.rule_idx]:
-                        value = ev(tree)
-                        if value is None:
-                            continue  # empty nodeset, XmlExtractor.java:104
-                        doc_ids.append(doc_id)
-                        seqs.append(frag.seq)
-                        orders.append(order)
-                        values.append(value)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(doc_ids, dtype="object"),
-                    "seq": pd.Series(seqs, dtype="int64"),
-                    "order": pd.Series(orders, dtype="int32"),
-                    "value": pd.Series(values, dtype="object"),
-                }
-            )
-
-    return docs.mapInPandas(scan_project, schema=_CELL_SCHEMA)
-
-
-def extract_cells(
-    docs: DataFrame,
-    config: ExtractionConfig,
-    *,
-    validate: bool = True,
-    fused: bool | None = None,
-) -> DataFrame:
-    """documents → long-format cell stream (the shuffle data shape,
-    ``XmlReducerKeyWritable.java:17-25``).
-
-    ``fused=None`` auto-selects: the fused Python fast path when every
-    XPath is in the supported subset, else the general JVM xpath path.
-    """
-    if fused is None:
-        fused = _compile_fused(config) is not None
-    if fused:
-        return extract_cells_fused(docs, config)
-    return project_cells(extract_fragments(docs, config, validate=validate), config)
-
-
 def extract(
     docs: DataFrame,
     config: ExtractionConfig,
     *,
     missing_value: str | None = " ",
-    validate: bool = True,
-    fused: bool | None = None,
 ) -> DataFrame:
     """Full pipeline: documents(doc_id, content) → assembled output rows.
 
@@ -245,9 +178,8 @@ def extract(
     document follows document order via ``seq``; use
     ``sinks.write_reference_format`` for the delimited-text sink.
     """
-    cells = extract_cells(docs, config, validate=validate, fused=fused)
     return assemble_rows(
-        cells,
+        extract_cells(docs, config),
         config.nr_of_columns,
         column_names=config.output_columns(),
         missing_value=missing_value,
@@ -273,9 +205,6 @@ def run_extraction(
     write_reference_format(result, config, output_path)
 
 
-_ERROR_SCHEMA = "doc_id string, seq long, rule string, error string, snippet string"
-
-
 def malformed_fragments(
     docs: DataFrame, config: ExtractionConfig, *, snippet_len: int = 120
 ) -> DataFrame:
@@ -293,38 +222,18 @@ def malformed_fragments(
     only if explicitly persisted, so prefer scheduling it as the
     validation stage of the landing pipeline.
     """
-    import xml.etree.ElementTree as ET
-
     compiled = compile_rules(config.rules)
     rule_names = [r.element_name for r in config.rules]
 
     def scan_errors(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            doc_ids: list[str] = []
-            seqs: list[int] = []
-            rules: list[str] = []
-            errors: list[str] = []
-            snippets: list[str] = []
-            for doc_id, content in zip(pdf["doc_id"], pdf["content"]):
-                if content is None:
-                    continue
-                for frag in scan_document(content, compiled, validate=False):
-                    try:
-                        ET.fromstring(frag.xml)
-                    except ET.ParseError as e:
-                        doc_ids.append(doc_id)
-                        seqs.append(frag.seq)
-                        rules.append(rule_names[frag.rule_idx])
-                        errors.append(str(e))
-                        snippets.append(frag.xml[:snippet_len])
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(doc_ids, dtype="object"),
-                    "seq": pd.Series(seqs, dtype="int64"),
-                    "rule": pd.Series(rules, dtype="object"),
-                    "error": pd.Series(errors, dtype="object"),
-                    "snippet": pd.Series(snippets, dtype="object"),
-                }
+            yield _frame(
+                [
+                    (doc_id, frag.seq, rule_names[frag.rule_idx], error, frag.xml[:snippet_len])
+                    for doc_id, frag, _, error in _parse_fragments(pdf, compiled)
+                    if error is not None
+                ],
+                _ERROR_COLUMNS,
             )
 
-    return docs.mapInPandas(scan_errors, schema=_ERROR_SCHEMA)
+    return docs.mapInPandas(scan_errors, schema=_spark_schema(_ERROR_COLUMNS))

@@ -6,9 +6,9 @@ it was 85% of extraction wall time. Real extraction configs (incl. both
 reference configs) overwhelmingly use the shape
 ``//el/sub/.../(@attr | text())`` with simple predicates per step,
 which evaluates in ~1 µs on an already-parsed ElementTree. This module
-compiles that subset; anything else returns ``None`` and the engine
-falls back to the general JVM ``xpath()`` path
-(``extract.project_cells``), keeping full XPath 1.0 compatibility.
+compiles that subset; anything else returns ``None`` and
+``extract.extract_cells`` evaluates that one XPath with the JVM
+``xpath()`` instead, keeping full XPath 1.0 compatibility.
 
 Subset grammar::
 

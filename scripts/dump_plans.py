@@ -6,10 +6,17 @@ under top-k windows, TakeOrderedAndProject for global top-k, pruned
 ReadSchema). Regenerate after plan-affecting changes:
 
     PYTHONPATH=. python scripts/dump_plans.py
+
+With ``--out DIR`` it instead writes one ``DIR/<query>_<tag>.txt`` per
+query — the before/after plan evidence of an optimization round
+(``plans/r14``, ``plans/r15``):
+
+    PYTHONPATH=. python scripts/dump_plans.py --out plans/r16 before [query ...]
 """
 
 from __future__ import annotations
 
+import argparse
 import io
 import os
 import sys
@@ -25,13 +32,27 @@ SF = "/root/testdata/sf0.001"
 
 
 def main() -> None:
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument("--out", metavar="DIR",
+                    help="write DIR/<query>_<tag>.txt per query instead of PLANS.md")
+    ap.add_argument("tag", nargs="?",
+                    help="with --out: file name suffix, e.g. before (default) or after")
+    ap.add_argument("queries", nargs="*",
+                    help="with --out: queries to dump (default: all bench headliners)")
+    args = ap.parse_args()
+    if args.out is None and args.tag is not None:
+        ap.error("a tag and queries need --out")
+    tag = args.tag or "before"
+
     spark = (
         SparkSession.builder.master("local[4]")
         .config("spark.sql.shuffle.partitions", "4")
         .config("spark.sql.adaptive.enabled", "true")
+        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")
         .getOrCreate()
     )
+    spark.sparkContext.setLogLevel("ERROR")
     out = io.StringIO()
     out.write(
         "# PLANS — physical plans of the bench headline queries\n\n"
@@ -43,18 +64,28 @@ def main() -> None:
         "top-k, and `ArrowEvalPython` (never `BatchEvalPython` row-mode)\n"
         "for the Python kernels.\n"
     )
+    if args.out:
+        os.makedirs(args.out, exist_ok=True)
     qs = entry.queries()
-    for name in bench.HEADLINE:
+    for name in args.queries or bench.HEADLINE:
         if name not in qs:
+            print(f"skip {name}: not in registry")
             continue
         df = qs[name](spark, SF)
         plan = df._sc._jvm.PythonSQLUtils.explainString(
             df._jdf.queryExecution(), "formatted"
         )
-        out.write(f"\n## {name}\n\n```\n{plan}\n```\n")
-    with open(os.path.join(os.path.dirname(__file__), "..", "PLANS.md"), "w") as f:
-        f.write(out.getvalue())
-    print("wrote PLANS.md")
+        if args.out:
+            path = os.path.join(args.out, f"{name}_{tag}.txt")
+            with open(path, "w") as f:
+                f.write(plan)
+            print(f"wrote {path}")
+        else:
+            out.write(f"\n## {name}\n\n```\n{plan}\n```\n")
+    if not args.out:
+        with open(os.path.join(os.path.dirname(__file__), "..", "PLANS.md"), "w") as f:
+            f.write(out.getvalue())
+        print("wrote PLANS.md")
 
 
 if __name__ == "__main__":

@@ -1,7 +1,10 @@
 #!/usr/bin/env python
 """Measure the fused-XPath hit rate (round-5 verdict item 7): which
-fraction of expressions compile onto the ~40x fused ElementTree path
-vs falling back to the general JVM ``xpath()``.
+fraction of expressions compile onto the ElementTree evaluators of the
+fused scan-and-parse pass vs going to the JVM ``xpath()``. Routing is
+per XPath: an out-of-subset expression sends only itself (and its
+rule's parsed fragments) to the JVM, so the rate is the share of
+XPath evaluations the Python pass handles, not a whole-config switch.
 
 Three corpora, measured separately:
 1. Both reference configs' expressions (ExtractInventory /

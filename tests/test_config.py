@@ -1,3 +1,7 @@
+import re
+
+import pytest
+
 from hadoopxmlextractor_spark.config import ExtractionConfig, ExtractRule, XPathSpec
 from tests.fixtures import BOOK_CONFIG_XML, INVENTORY_CONFIG_XML
 
@@ -54,3 +58,32 @@ def test_output_columns_default_and_named():
         cfg.rules, nr_of_columns=2, column_names=("a", "b")
     )
     assert named.output_columns() == ["a", "b"]
+
+
+@pytest.mark.parametrize(
+    "edit, message",
+    [
+        (("<property><name>xmlextractor.nr_of_columns</name><value>6</value></property>", ""),
+         "xmlextractor.nr_of_columns"),
+        (("<property><name>xmlextractor.nodes</name>", "<property><name>unused</name>"),
+         "xmlextractor.nodes"),
+        (("<property><name>address</name>", "<property><name>unused</name>"), "'address'"),
+        (("5#//book/@inStock", "7#//book/@inStock"), "order 7"),
+        (("0#//store/@name", "-1#//store/@name"), "order -1"),
+    ],
+)
+def test_invalid_config_raises_value_error(edit, message):
+    # A missing property or an order outside [0, nr_of_columns) fails at
+    # parse time, naming the key or order, instead of a bare KeyError or
+    # a job that silently emits zero rows.
+    broken = INVENTORY_CONFIG_XML.replace(*edit)
+    assert broken != INVENTORY_CONFIG_XML
+    with pytest.raises(ValueError, match=re.escape(message)):
+        ExtractionConfig.from_hadoop_xml(broken, is_text=True)
+
+
+def test_from_rules_checks_order_range():
+    rule = ExtractRule("r", "r", False, True, None, (XPathSpec(2, "//r"),))
+    assert ExtractionConfig.from_rules([rule], nr_of_columns=3).nr_of_columns == 3
+    with pytest.raises(ValueError, match="order 2"):
+        ExtractionConfig.from_rules([rule], nr_of_columns=2)

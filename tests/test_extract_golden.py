@@ -5,8 +5,15 @@ golden outputs — 30 rows for ExtractInventory, 4 rows for ExtractBook.
 
 import pytest
 
+from hadoopxmlextractor_spark import xpath_subset
 from hadoopxmlextractor_spark.config import ExtractionConfig
-from hadoopxmlextractor_spark.extract import extract, extract_cells, run_extraction
+from hadoopxmlextractor_spark.extract import (
+    extract,
+    extract_cells,
+    malformed_fragments,
+    run_extraction,
+)
+from hadoopxmlextractor_spark.plans import executed_plan
 from hadoopxmlextractor_spark.sinks import to_reference_lines
 from hadoopxmlextractor_spark.sources import docs_from_strings
 from tests.fixtures import (
@@ -32,6 +39,27 @@ def docs(spark):
 
 def _result_rows(df):
     return [tuple(r)[2:] for r in df.orderBy("doc_id", "seq").collect()]
+
+
+@pytest.fixture
+def all_jvm(monkeypatch):
+    """Run a query with every XPath routed to the JVM ``xpath()`` — the
+    reference the subset evaluators are compared against."""
+
+    def run(query):
+        with monkeypatch.context() as m:
+            m.setattr(xpath_subset, "compile_subset", lambda expr: None)
+            return query()
+
+    return run
+
+
+def _in_subset(cfg) -> bool:
+    return all(
+        xpath_subset.compile_subset(xp.expr) is not None
+        for rule in cfg.rules
+        for xp in rule.xpaths
+    )
 
 
 def test_extract_inventory_30_golden_rows(spark, docs):
@@ -107,13 +135,10 @@ def test_multi_node_xpath_concatenates(spark):
     assert [tuple(r)[2:] for r in out] == [("ab", " ", "z")]
 
 
-def test_namespaced_config_runs_fused_and_agrees_with_general(spark):
+def test_namespaced_config_runs_fused_and_agrees_with_general(spark, all_jvm):
     # A namespaced document + a prefixed config: the prefixed steps are
-    # IN the fused subset (local-name matching), so extraction stays on
-    # the fast path, and the general JVM path (prefix-stripped xpath)
-    # produces identical rows.
-    from hadoopxmlextractor_spark.extract import _compile_fused
-
+    # IN the subset (local-name matching), so the Python pass evaluates
+    # them, and the JVM xpath (prefix-stripped) produces identical rows.
     doc = (
         '<bk:cat xmlns:bk="http://example.com/b">'
         '<bk:shelf xmlns:bk="http://example.com/b" loc="top">'
@@ -132,61 +157,69 @@ def test_namespaced_config_runs_fused_and_agrees_with_general(spark):
         ],
         nr_of_columns=3,
     )
-    assert _compile_fused(cfg) is not None  # prefixed config → fused
+    assert _in_subset(cfg)  # prefixed config → Python pass
     docs = docs_from_strings(spark, {"d": doc})
     # NB the scanner matches the literal byte pattern (<bk:shelf ) exactly
     # like the reference's RecordReader; the bk:shelf fragment carries
     # its own xmlns so the per-fragment parse resolves the prefix.
-    fused_rows = [tuple(r)[2:] for r in extract(docs, cfg, fused=True).collect()]
-    general_rows = [tuple(r)[2:] for r in extract(docs, cfg, fused=False).collect()]
-    assert fused_rows == general_rows
-    assert fused_rows == [("top", "b1b2", "79")]
+    rows = [tuple(r)[2:] for r in extract(docs, cfg).collect()]
+    jvm_rows = all_jvm(lambda: [tuple(r)[2:] for r in extract(docs, cfg).collect()])
+    assert rows == jvm_rows
+    assert rows == [("top", "b1b2", "79")]
 
 
-def test_fused_and_general_paths_agree(spark, docs):
-    fused = extract(docs, INV_CFG, fused=True)
-    general = extract(docs, INV_CFG, fused=False)
-    assert sorted(map(tuple, fused.collect())) == sorted(map(tuple, general.collect()))
+def test_fused_and_general_paths_agree(spark, docs, all_jvm):
+    rows = sorted(map(tuple, extract(docs, INV_CFG).collect()))
+    assert rows == all_jvm(lambda: sorted(map(tuple, extract(docs, INV_CFG).collect())))
 
 
 def test_auto_path_selection():
-    from hadoopxmlextractor_spark.extract import _compile_fused
-    assert _compile_fused(INV_CFG) is not None  # reference config → fused
-    from hadoopxmlextractor_spark.config import ExtractionConfig
-    pred_cfg = ExtractionConfig.from_rules(
-        [ExtractionConfig.parse_rule("r", "r;false;true; ;0#//r[@x='1']/@x;", ";", "#")],
-        nr_of_columns=1,
+    # Routing is per XPath: compile_subset decides which XPaths the
+    # Python pass evaluates; the rest go to the JVM xpath().
+    for expr, in_subset in [
+        ("//store/@name", True),  # reference config
+        ("//r[@x='1']/@x", True),  # eq-predicate
+        ("//r/following::x", True),  # full-document axis
+        ("//r[position()=1]/@x", True),
+        ("//r/ancestor::x[1]/@x", True),
+        ("//r[a[b]]/@x", False),  # nested predicate
+        ("//address/child::phone/text()", False),  # explicit child axis
+    ]:
+        assert (xpath_subset.compile_subset(expr) is not None) == in_subset, expr
+    assert _in_subset(INV_CFG)
+
+
+def test_mixed_config_sends_only_out_of_subset_xpaths_to_jvm(spark, docs, all_jvm):
+    # One XPath outside the subset routes only its own rule's fragments
+    # to the JVM; every other XPath stays in the Python pass.
+    mixed_xml = INVENTORY_CONFIG_XML.replace(
+        "1#//address/phone/text();", "1#//address/child::phone/text();"
     )
-    assert _compile_fused(pred_cfg) is not None  # eq-predicate → still fused
-    # round-5: following:: moved INTO the subset — use a still-exotic
-    # form (nested predicate) to exercise the JVM routing decision
-    assert _compile_fused(ExtractionConfig.from_rules(
-        [ExtractionConfig.parse_rule("r", "r;false;true; ;0#//r/following::x;", ";", "#")],
-        nr_of_columns=1,
-    )) is not None  # full-document axis → now fused
-    exotic = ExtractionConfig.from_rules(
-        [ExtractionConfig.parse_rule("r", "r;false;true; ;0#//r[a[b]]/@x;", ";", "#")],
-        nr_of_columns=1,
-    )
-    assert _compile_fused(exotic) is None  # nested predicate → JVM path
-    positional = ExtractionConfig.from_rules(
-        [ExtractionConfig.parse_rule("r", "r;false;true; ;0#//r[position()=1]/@x;", ";", "#")],
-        nr_of_columns=1,
-    )
-    assert _compile_fused(positional) is not None  # now on the fast path
-    ancestor = ExtractionConfig.from_rules(
-        [ExtractionConfig.parse_rule("r", "r;false;true; ;0#//r/ancestor::x[1]/@x;", ";", "#")],
-        nr_of_columns=1,
-    )
-    assert _compile_fused(ancestor) is not None  # round-5: fused too
+    assert mixed_xml != INVENTORY_CONFIG_XML
+    mixed = ExtractionConfig.from_hadoop_xml(mixed_xml, is_text=True)
+    assert not _in_subset(mixed)
+
+    out = extract(docs, mixed)
+    assert executed_plan(out).count("XPathListEvaluator(") == 1
+    rows = _result_rows(out)
+    assert rows == _result_rows(extract(docs, INV_CFG))
+    assert rows == all_jvm(lambda: _result_rows(extract(docs, mixed)))
+
+    # A malformed fragment of the JVM-routed rule never reaches the JVM
+    # xpath (which raises on malformed XML): it drops, and the audit
+    # stream reports it.
+    bad = "<address><phone>555</address>"
+    broken = make_store_xml(SOHO).replace("<inventory ", bad + "<inventory ", 1)
+    broken_docs = docs_from_strings(spark, {"broken.xml": broken})
+    assert _result_rows(extract(broken_docs, mixed)) == golden_rows([SOHO])
+    errs = malformed_fragments(broken_docs, mixed).collect()
+    assert [(e.rule, e.seq) for e in errs] == [("address", broken.index(bad))]
 
 
 def test_malformed_fragments_audit_stream(spark):
     # A fragment whose start tag matches but whose body is broken XML:
     # the extraction drops it (reference semantics); the audit stream
     # reports it with position and reason.
-    from hadoopxmlextractor_spark.extract import extract, malformed_fragments
-
     cfg = ExtractionConfig.from_hadoop_xml(
         """<?xml version="1.0"?>
         <configuration>
@@ -215,12 +248,10 @@ def test_malformed_fragments_audit_stream(spark):
     assert [r.c0 for r in rows] == ["bk1"]
 
 
-def test_descendant_and_positional_configs_run_fused_and_agree(spark):
+def test_descendant_and_positional_configs_run_fused_and_agree(spark, all_jvm):
     # Mid-path // (descendant axis) and [n] (per-parent positional
-    # predicate) are IN the fused subset; extraction stays on the fast
-    # path and matches the general javax/JVM xpath path node-for-node.
-    from hadoopxmlextractor_spark.extract import _compile_fused
-
+    # predicate) are IN the subset; the Python pass matches the
+    # javax/JVM xpath node-for-node.
     doc = (
         '<cat loc="top"><shelf><row><book id="b1"><n>7</n></book>'
         '<book id="b2"><n>9</n></book></row>'
@@ -238,17 +269,17 @@ def test_descendant_and_positional_configs_run_fused_and_agree(spark):
         ],
         nr_of_columns=5,
     )
-    assert _compile_fused(cfg) is not None  # //, [n], //text() → still fused
+    assert _in_subset(cfg)  # //, [n], //text() → Python pass
     docs = docs_from_strings(spark, {"d": doc})
-    fused_rows = [tuple(r)[2:] for r in extract(docs, cfg, fused=True).collect()]
-    general_rows = [tuple(r)[2:] for r in extract(docs, cfg, fused=False).collect()]
-    assert fused_rows == general_rows
-    assert fused_rows == [("top", "b1b2b3", "b2", "794", "794")]
+    rows = [tuple(r)[2:] for r in extract(docs, cfg).collect()]
+    jvm_rows = all_jvm(lambda: [tuple(r)[2:] for r in extract(docs, cfg).collect()])
+    assert rows == jvm_rows
+    assert rows == [("top", "b1b2b3", "b2", "794", "794")]
 
 
-def test_fused_and_general_paths_agree_with_predicates(spark):
-    # The new [@attr='v'] fused support must match javax XPath (the
-    # general path) node-for-node, including the no-match → dropped-cell
+def test_fused_and_general_paths_agree_with_predicates(spark, all_jvm):
+    # The [@attr='v'] subset support must match javax XPath (the JVM
+    # xpath) node-for-node, including the no-match → dropped-cell
     # semantics.
     cfg = ExtractionConfig.from_rules(
         [
@@ -270,11 +301,8 @@ def test_fused_and_general_paths_agree_with_predicates(spark):
         "</store>"
     )
     docs = spark.createDataFrame([("d", doc)], "doc_id string, content string")
-    from hadoopxmlextractor_spark.extract import _compile_fused, extract_cells
-
-    assert _compile_fused(cfg) is not None  # stays on the fast path
-    fused = sorted(map(tuple, extract_cells(docs, cfg, fused=True).collect()))
-    general = sorted(map(tuple, extract_cells(docs, cfg, fused=False).collect()))
-    assert fused == general
+    assert _in_subset(cfg)  # stays in the Python pass
+    cells = sorted(map(tuple, extract_cells(docs, cfg).collect()))
+    assert cells == all_jvm(lambda: sorted(map(tuple, extract_cells(docs, cfg).collect())))
     # Jan fragment matches bk106 (13); Feb fragment drops the cell
-    assert [(v,) for *_, v in fused].count(("13",)) == 1
+    assert [(v,) for *_, v in cells].count(("13",)) == 1

@@ -51,6 +51,24 @@ def test_extraction_assembly_single_shuffle(spark):
     assert count_exchanges(assemble_rows(cells, 2)) == 1
 
 
+def test_all_subset_extraction_is_one_python_pass_and_one_shuffle(spark):
+    # Every XPath of the reference config is in the subset: the plan is
+    # MapInPandas → Exchange → Window, with no JVM xpath projection and
+    # no explode of its per-rule cell arrays.
+    from hadoopxmlextractor_spark.config import ExtractionConfig
+    from hadoopxmlextractor_spark.extract import extract
+    from hadoopxmlextractor_spark.sources import docs_from_strings
+    from tests.fixtures import INVENTORY_CONFIG_XML, SOHO, make_store_xml
+
+    cfg = ExtractionConfig.from_hadoop_xml(INVENTORY_CONFIG_XML, is_text=True)
+    out = extract(docs_from_strings(spark, {"d": make_store_xml(SOHO)}), cfg)
+    plan = executed_plan(out)
+    assert count_exchanges(out) == 1
+    assert "MapInPandas" in plan
+    assert "Generate" not in plan
+    assert "XPathListEvaluator" not in plan
+
+
 def test_salted_agg_matches_plain(spark):
     orders = load(spark, SF, "orders")
     plain = {

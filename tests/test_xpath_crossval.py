@@ -222,10 +222,10 @@ def test_fused_subset_agrees_with_jvm_xpath_on_generated_cases(spark):
         expr = _gen_expr(rng)
         ev = compile_subset(expr)
         assert ev is not None, f"generated expr left the subset: {expr}"
-        jvm_expr = normalize_for_jvm(expr)  # what project_cells evaluates
+        jvm_expr = normalize_for_jvm(expr)  # what extract._xpath_array evaluates
         jvm = {
             # null node values join as "" (array_join semantics in
-            # extract.project_cells); empty array ≡ no cell ≡ None
+            # extract.extract_cells); empty array ≡ no cell ≡ None
             r["i"]: "".join(x or "" for x in r["nodes"]) if r["nodes"] else None
             for r in df.select(
                 "i", F.xpath("xml", F.lit(jvm_expr)).alias("nodes")

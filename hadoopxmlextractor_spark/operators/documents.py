@@ -5972,27 +5972,45 @@ _7Z_CODER_IDS = {
 _7Z_CODER_CIDS = {v: k for k, v in _7Z_CODER_IDS.items()}
 
 
+# 7-Zip refuses NumCyclesPower above 24 (7zAes.cpp); the props carry up
+# to 62, so a hostile header could otherwise ask for 2^62 SHA-256 rounds.
+_SZ_AES_MAX_CYCLES = 24
+# Rows hashed per update: memory stays a few MB at any cycles.
+_SZ_AES_SLAB_ROWS = 1 << 16
+
+
 def _sz_aes_key(password: str, salt: bytes, cycles: int) -> bytes:
     """7z AES-256 key derivation (7-Zip 7zAes.cpp semantics): the
     password as UTF-16LE appended to the salt, then SHA-256 over
     2^cycles repetitions of (salt || password || counter_le64) fed
     into ONE running hash. cycles == 0x3F short-circuits to the raw
-    zero-padded salt+password (the spec's no-KDF escape hatch)."""
+    zero-padded salt+password (the spec's no-KDF escape hatch);
+    cycles above 24 raise ValueError, as 7-Zip refuses them."""
     data = salt + password.encode("utf-16-le")
     if cycles == 0x3F:
         return (data + bytes(32))[:32]
+    if cycles > _SZ_AES_MAX_CYCLES:
+        raise ValueError(
+            f"7z AES NumCyclesPower {cycles} above the supported "
+            f"maximum {_SZ_AES_MAX_CYCLES}"
+        )
     # r15 opt (guide §4.2): ONE running SHA-256 over the concatenated
     # (data ‖ counter_le64) repetitions — the per-iteration two-update
-    # Python loop cost ~5× the hash itself at NumCyclesPower 14. The
-    # buffer is built vectorized (rows of data bytes + a little-endian
-    # u64 counter column) and hashed in one call; bit-identical input
-    # stream by construction.
+    # Python loop cost ~5× the hash itself at NumCyclesPower 14. Each
+    # slab is built vectorized (rows of data bytes + a little-endian
+    # u64 counter column) and fed to the hash in turn; the input
+    # stream is bit-identical to one update over all 2^cycles rows.
     n = 1 << cycles
     w = len(data)
-    buf = np.empty((n, w + 8), dtype=np.uint8)
+    rows = min(n, _SZ_AES_SLAB_ROWS)
+    buf = np.empty((rows, w + 8), dtype=np.uint8)
     buf[:, :w] = np.frombuffer(data, dtype=np.uint8)
-    buf[:, w:] = np.arange(n, dtype="<u8").reshape(n, 1).view(np.uint8)
-    return hashlib.sha256(buf.tobytes()).digest()
+    h = hashlib.sha256()
+    for first in range(0, n, rows):
+        ctr = np.arange(first, first + rows, dtype="<u8")
+        buf[:, w:] = ctr.reshape(rows, 1).view(np.uint8)
+        h.update(buf)
+    return h.digest()
 
 
 def _sz_aes_props(props: bytes) -> tuple[int, bytes, bytes]:

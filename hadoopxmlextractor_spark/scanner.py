@@ -12,6 +12,13 @@ the per-document work is distributed; Python's ``str.find`` is a C-level
 substring search, which plays the role of the reference's per-byte
 ``readUntilMatch`` loop.
 
+The pass stays linear like the reference's: each rule keeps a cached
+next start-pattern match and searches again only after a fragment has
+consumed that match, so every rule walks the document once; end-pattern
+and ``>`` searches stay inside the fragment they close (every end
+pattern contains ``>``). Total ``str.find`` work is O(rules × document
+length), however many fragments the document holds.
+
 Semantics preserved deliberately (SURVEY.md §2.2):
 - Non-overlapping fragments: once a start pattern matches, other rules are
   not scanned until the fragment closes (§2.2-8).
@@ -63,18 +70,25 @@ def scan_document(
     """Yield non-overlapping fragments of all rules in document order.
 
     Equivalent of the reference's fragment iterator
-    (``SeqXmlRecordReader.java:162-203``) driving ``readUntilMatch``.
+    (``SeqXmlRecordReader.java:162-203``) driving ``readUntilMatch``, in
+    O(len(compiled) × len(content)) ``str.find`` work.
     """
     pos = 0
     n = len(content)
+    # nxt[i]: rule i's first start-pattern match at or after the position
+    # it was last searched from. While nxt[i] >= pos it is still rule i's
+    # next match, so it is searched for again only once a fragment has
+    # moved pos past it; -1 stays final because pos only grows.
+    nxt = [content.find(rule.start_pattern) for rule in compiled]
     while pos < n:
         # Earliest next start-pattern match across all rules; ties broken by
         # rule declaration order (the reference's matchStack examines
         # patterns in array order, SeqXmlRecordReader.java:307-324).
         best_at = -1
         best_rule = -1
-        for idx, rule in enumerate(compiled):
-            at = content.find(rule.start_pattern, pos)
+        for idx, at in enumerate(nxt):
+            if 0 <= at < pos:
+                at = nxt[idx] = content.find(compiled[idx].start_pattern, pos)
             if at != -1 and (best_at == -1 or at < best_at):
                 best_at, best_rule = at, idx
         if best_at == -1:

@@ -1951,6 +1951,31 @@ def test_7z_aes_key_derivation_pins():
     assert D._sz_aes_props(props2) == (10, salt, bytes(16))
 
 
+def test_7z_aes_key_derivation_is_bounded():
+    """The KDF hashes in bounded slabs with the same byte stream: the
+    digest matches a one-shot hash for every cycles count up to 18
+    (several slabs from 17 on) and the 0x3F escape. A NumCyclesPower
+    above 7-Zip's maximum of 24 from untrusted props refuses as
+    ValueError, before any allocation, instead of a MemoryError."""
+    salt = bytes(range(8))
+    pw = "pässword"
+    data = salt + pw.encode("utf-16-le")
+    for cycles in range(19):
+        one_shot = hashlib.sha256(b"".join(
+            data + i.to_bytes(8, "little") for i in range(1 << cycles)
+        )).digest()
+        assert D._sz_aes_key(pw, salt, cycles) == one_shot, cycles
+    assert D._sz_aes_key(pw, salt, 0x3F) == (data + bytes(32))[:32]
+    for cycles in (25, 44, 62):
+        with pytest.raises(ValueError, match="NumCyclesPower"):
+            D._sz_aes_key(pw, salt, cycles)
+    # through the decoder: hostile coder props become a ValueError, which
+    # sevenzip_members turns into a per-folder verdict, not a crashed task
+    props = bytes([44 | 0xC0, 0x7F]) + salt + bytes(16)
+    with pytest.raises(ValueError, match="NumCyclesPower"):
+        D._sz_decode_chain([("aes256", props, 16)], bytes(16), password=pw)
+
+
 # a REAL `7z` CLI archive (libarchive's test corpus, found in this
 # container r14): encoded header, one solid LZMA2 folder holding two
 # files behind SubStreamsInfo, a directory entry, mtimes/attributes

@@ -7,11 +7,11 @@ from __future__ import annotations
 
 import xml.etree.ElementTree as ET
 
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 from hadoopxmlextractor_spark.config import ExtractionConfig
-from hadoopxmlextractor_spark.scanner import scan_with_config
+from hadoopxmlextractor_spark.scanner import CompiledRule, Fragment, scan_document, scan_with_config
 from hadoopxmlextractor_spark.xpath_subset import compile_subset
 
 # --- generators -----------------------------------------------------------
@@ -108,6 +108,105 @@ def test_assembly_semantics_pure(doc):
     assert [r[3] for r in rows] == [str(q) for _, q in items]
     # forward fill: store name present on every row once seen
     assert all(r[0] == "S" for r in rows)
+
+
+def _scan_reference(content, compiled, *, validate=True):
+    """The scanner before its next-match cache: every rule's start pattern
+    is searched for again from ``pos`` after every fragment. Quadratic in
+    the document, kept only as the oracle for ``scan_document``."""
+    pos = 0
+    n = len(content)
+    while pos < n:
+        best_at = -1
+        best_rule = -1
+        for idx, rule in enumerate(compiled):
+            at = content.find(rule.start_pattern, pos)
+            if at != -1 and (best_at == -1 or at < best_at):
+                best_at, best_rule = at, idx
+        if best_at == -1:
+            return
+        rule = compiled[best_rule]
+        end_at = content.find(rule.end_pattern, best_at + len(rule.start_pattern))
+        if end_at == -1:
+            return
+        frag_end = end_at + len(rule.end_pattern)
+        if rule.attribute_value is not None:
+            gt = content.find(">", best_at)
+            start_tag = content[best_at : gt + 1] if gt != -1 else content[best_at:]
+            if rule.attribute_value not in start_tag:
+                pos = frag_end
+                continue
+        fragment = content[best_at:frag_end] + rule.buffer_addition
+        if validate:
+            try:
+                ET.fromstring(fragment)
+            except ET.ParseError:
+                pos = frag_end
+                continue
+        yield Fragment(seq=best_at, rule_idx=best_rule, xml=fragment)
+        pos = frag_end
+
+
+def _rule(start, end, attr=None):
+    # include_children=false shape (end ">") re-wraps with a close tag
+    name = start.strip("<> ") or "a"
+    return CompiledRule(start, end, f"</{name}>" if end == ">" else "", attr)
+
+
+# Start patterns with shared prefixes ("<a" / "<a " / "<ab"), overlaps
+# ("<<a" / "<a<", self-overlapping "aa"), and real rule shapes.
+_STARTS = ["<a ", "<a>", "<a", "<ab ", "<ab>", "<b ", "<b>", "<<a", "<a<", "aa", "b="]
+_ENDS = [">", "</a>", "</ab>", "</b>", "/>", "a>"]
+_ATTRS = [None, None, 'x="1"', "1", "a", "=", 'x="2"']
+# What goes between a start pattern and an end pattern: attributes that
+# hit or miss the predicates, text, and nested markup of other rules.
+_MIDDLES = ["", ">", ' x="1">', ' x="2">', 'x="1" ', "t>", "><b>in</b>", "><a>in</a>", "<a ", "a"]
+
+
+@st.composite
+def _scan_case(draw):
+    """(content, compiled rules): content is built mostly from the rules'
+    own start and end patterns, so fragments open, close, nest, tie and
+    hit predicates often, with garbage over ``<>/ "=ab`` between them."""
+    compiled = tuple(
+        draw(
+            st.lists(
+                st.builds(_rule, st.sampled_from(_STARTS), st.sampled_from(_ENDS), st.sampled_from(_ATTRS)),
+                min_size=1,
+                max_size=4,
+            )
+        )
+    )
+    pieces = st.sampled_from(compiled).flatmap(
+        lambda rule: st.tuples(
+            st.just(rule.start_pattern),
+            st.sampled_from(_MIDDLES),
+            st.one_of(st.just(rule.end_pattern), st.sampled_from(_ENDS)),
+        ).map("".join)
+    )
+    parts = draw(st.lists(st.one_of(pieces, st.text(alphabet='<>/ "=ab', max_size=4)), max_size=20))
+    return "".join(parts), compiled
+
+
+@given(_scan_case(), st.booleans())
+@settings(max_examples=500, deadline=None)
+# two rules with the same start pattern: the first declared wins
+@example(("<a>x</a><a>y</a>", (_rule("<a>", "</a>"), _rule("<a>", "</a>"))), True)
+# one start pattern a prefix of another
+@example(('<ab x="1"><a x="1"></a></ab>', (_rule("<a", ">"), _rule("<ab ", ">"))), False)
+# overlapping start patterns, and a self-overlapping one
+@example(("<<a<a<<aaaa>", (_rule("<<a", ">"), _rule("<a<", ">"), _rule("aa", ">"))), False)
+# a rule's pattern nested in another's include-children fragment is swallowed
+@example(("<a><b>in</b></a><b>out</b>", (_rule("<a>", "</a>"), _rule("<b>", "</b>"))), True)
+# attribute predicate hit and miss
+@example(('<a x="1"><a x="2"><a x="1">', (_rule("<a ", ">", 'x="1"'),)), True)
+# unclosed tail: the scan stops at the first fragment that never closes
+@example(("<a>ok</a><b>open<a>late</a>", (_rule("<a>", "</a>"), _rule("<b>", "</b>"))), True)
+def test_scan_document_matches_rescanning_reference(case, validate):
+    content, compiled = case
+    assert list(scan_document(content, compiled, validate=validate)) == list(
+        _scan_reference(content, compiled, validate=validate)
+    )
 
 
 @given(st.text(alphabet="ab<>/ \"=x", max_size=80))

@@ -1,7 +1,9 @@
 import xml.etree.ElementTree as ET
 
+import pytest
+
 from hadoopxmlextractor_spark.config import ExtractionConfig
-from hadoopxmlextractor_spark.scanner import scan_with_config
+from hadoopxmlextractor_spark.scanner import compile_rules, scan_document, scan_with_config
 from tests.fixtures import BOOK_CONFIG_XML, INVENTORY_CONFIG_XML, SOHO, make_store_xml
 
 INV_CFG = ExtractionConfig.from_hadoop_xml(INVENTORY_CONFIG_XML, is_text=True)
@@ -77,3 +79,49 @@ def test_unclosed_fragment_stops_scan():
         nr_of_columns=1,
     )
     assert scan_with_config("<a>never closes", cfg) == []
+
+
+class _CountingStr(str):
+    """A document that counts its ``find`` calls and the characters they
+    walk (from the start offset to the match's end, or to EOF)."""
+
+    calls = walked = 0
+
+    def find(self, sub, start=0, *rest):
+        at = super().find(sub, start, *rest)
+        self.calls += 1
+        self.walked += (len(self) if at == -1 else at + len(sub)) - start
+        return at
+
+
+def _big_store(n_books: int, pad: int) -> str:
+    # one <store >, one <address>, three <inventory >, n_books <book >,
+    # with `pad` filler characters inside every book
+    books = "".join(
+        f'<book id="bk{i:03d}" inStock="{i % 7}"><d>{"x" * pad}</d></book>'
+        for i in range(n_books // 3)
+    )
+    invs = "".join(f'<inventory month="M{k}" day="{k}"><books>{books}</books></inventory>'
+                   for k in range(3))
+    return f'<store name="S"><address><phone>1</phone></address>{invs}</store>'
+
+
+@pytest.mark.parametrize("cfg", [INV_CFG, BOOK_CFG], ids=["inventory", "book_filter"])
+def test_scan_work_is_linear_in_the_document(cfg):
+    """Each rule walks the document once: ``find`` calls are bounded by the
+    rules plus three per start-pattern occurrence (a re-search, an end
+    search and a ``>`` search), do not grow with the document at a fixed
+    fragment count, and the characters walked stay within (rules + 2)
+    passes over the document. Searching the rest of the document for every
+    rule after every fragment breaks the call and character bounds."""
+    compiled = compile_rules(cfg.rules)
+    calls = []
+    for pad in (10, 2_000):
+        doc = _CountingStr(_big_store(330, pad))
+        frags = list(scan_document(doc, compiled, validate=False))
+        assert len(frags) == (335 if cfg is INV_CFG else 8)  # bk106 once per inventory
+        occurrences = sum(doc.count(r.start_pattern) for r in compiled)
+        assert doc.calls <= len(compiled) + 3 * occurrences
+        assert doc.walked <= (len(compiled) + 2) * len(doc)
+        calls.append(doc.calls)
+    assert calls[0] == calls[1]

@@ -22,13 +22,21 @@ Spark-first restatement of the reference's fixed physical plan
    and a JVM-side ``xpath()`` evaluates just those XPaths on it, gated
    by rule index. This stage is absent from the plan when every XPath
    is in the subset.
-4. **Assembly** — ``operators.assembly.assemble_rows``: one shuffle
-   (partition by doc, sort by (seq, order)), running forward fill,
-   trigger-gated emit.
+4. **Assembly** — running forward fill and trigger-gated emit, the
+   reference's Reduce (``XmlExtractor.java:150-175``). When every XPath
+   is in the subset, the pass of step 2 does it: one task reads a whole
+   document (files are not split), so its cells already arrive in
+   ``(seq, order)`` order and the reference's partitioner and sort
+   comparators have nothing to do. Otherwise the JVM cells go through
+   ``operators.assembly.assemble_rows``: one shuffle (partition by doc,
+   sort by (seq, order)).
 
 In both projections several matched nodes concatenate with no separator
 and an empty nodeset drops the cell (``XmlExtractor.java:100-112``).
-The plan has exactly one shuffle, keyed on the high-cardinality doc_id.
+The all-subset plan has no shuffle; the plan with JVM XPaths has exactly
+one, keyed on the high-cardinality doc_id. Either way every document's
+rows leave in one partition, contiguous and in ``seq`` order, which is
+what the reference-format sink needs.
 """
 
 from __future__ import annotations
@@ -39,11 +47,13 @@ from typing import Callable, Iterator
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from hadoopxmlextractor_spark import xpath_subset
 from hadoopxmlextractor_spark.config import ExtractionConfig, XPathSpec
 from hadoopxmlextractor_spark.operators.assembly import assemble_rows
 from hadoopxmlextractor_spark.scanner import CompiledRule, Fragment, compile_rules, scan_document
+from hadoopxmlextractor_spark.sinks import reference_line
 
 _CELL_COLUMNS = {"doc_id": "object", "seq": "int64", "order": "Int32", "value": "object"}
 _ROUTED_COLUMNS = {**_CELL_COLUMNS, "rule_idx": "Int32", "fragment": "object"}
@@ -59,6 +69,23 @@ def _spark_schema(columns: dict[str, str]) -> str:
 
 def _frame(rows: list[tuple], columns: dict[str, str]) -> pd.DataFrame:
     return pd.DataFrame.from_records(rows, columns=list(columns)).astype(columns)
+
+
+_Evaluators = list[list[tuple[int, Callable[[ET.Element], str | None]]]]
+
+
+def _route(config: ExtractionConfig) -> tuple[_Evaluators, list[list[XPathSpec]]]:
+    """Per rule: the ``(order, evaluator)`` pairs of the XPaths the
+    ``xpath_subset`` compiler accepts, in ascending order, and the
+    XPaths left to the JVM ``xpath()``. Decided once, on the driver."""
+    in_subset: _Evaluators = []
+    on_jvm: list[list[XPathSpec]] = []
+    for rule in config.rules:
+        xpaths = sorted(rule.xpaths, key=lambda xp: xp.order)
+        evaluators = [(xp, xpath_subset.compile_subset(xp.expr)) for xp in xpaths]
+        in_subset.append([(xp.order, ev) for xp, ev in evaluators if ev is not None])
+        on_jvm.append([xp for xp, ev in evaluators if ev is None])
+    return in_subset, on_jvm
 
 
 def _parse_fragments(
@@ -79,6 +106,23 @@ def _parse_fragments(
                 yield doc_id, frag, None, str(e)
             else:
                 yield doc_id, frag, tree, None
+
+
+def _evaluate_fragments(
+    pdf: pd.DataFrame, compiled: tuple[CompiledRule, ...], in_subset: _Evaluators
+) -> Iterator[tuple[str, Fragment, list[tuple[int, str]]]]:
+    """Yield ``(doc_id, fragment, cells)`` for every fragment that
+    parses, in document order; ``cells`` holds the ``(order, value)`` of
+    each in-subset XPath with a non-empty nodeset, in ascending order."""
+    for doc_id, frag, tree, _ in _parse_fragments(pdf, compiled):
+        if tree is None:
+            continue  # silent drop, XmlExtractor.java:114-126
+        cells = []
+        for order, ev in in_subset[frag.rule_idx]:
+            value = ev(tree)
+            if value is not None:  # empty nodeset → no cell, XmlExtractor.java:104
+                cells.append((order, value))
+        yield doc_id, frag, cells
 
 
 def _xpath_array(col: str, expr: str):
@@ -107,25 +151,15 @@ def extract_cells(docs: DataFrame, config: ExtractionConfig) -> DataFrame:
     worker).
     """
     compiled = compile_rules(config.rules)
-    in_subset: list[list[tuple[int, Callable[[ET.Element], str | None]]]] = []
-    on_jvm: list[list[XPathSpec]] = []
-    for rule in config.rules:
-        evaluators = [(xp, xpath_subset.compile_subset(xp.expr)) for xp in rule.xpaths]
-        in_subset.append([(xp.order, ev) for xp, ev in evaluators if ev is not None])
-        on_jvm.append([xp for xp, ev in evaluators if ev is None])
+    in_subset, on_jvm = _route(config)
     columns = _ROUTED_COLUMNS if any(on_jvm) else _CELL_COLUMNS
     no_fragment = (None,) * (len(columns) - len(_CELL_COLUMNS))
 
     def scan_project(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows: list[tuple] = []
-            for doc_id, frag, tree, _ in _parse_fragments(pdf, compiled):
-                if tree is None:
-                    continue  # silent drop, XmlExtractor.java:114-126
-                for order, ev in in_subset[frag.rule_idx]:
-                    value = ev(tree)
-                    if value is not None:  # empty nodeset → no cell, XmlExtractor.java:104
-                        rows.append((doc_id, frag.seq, order, value) + no_fragment)
+            for doc_id, frag, cells in _evaluate_fragments(pdf, compiled, in_subset):
+                rows.extend((doc_id, frag.seq, order, value) + no_fragment for order, value in cells)
                 if on_jvm[frag.rule_idx]:
                     rows.append((doc_id, frag.seq, None, None, frag.rule_idx, frag.xml))
             yield _frame(rows, columns)
@@ -166,6 +200,46 @@ def extract_cells(docs: DataFrame, config: ExtractionConfig) -> DataFrame:
     )
 
 
+def _fill_rows(
+    docs: DataFrame, config: ExtractionConfig, in_subset: _Evaluators, missing_value: str | None
+) -> DataFrame:
+    """documents → assembled rows in one Python pass, for a config whose
+    XPaths are all in the subset: scan, parse and evaluate as
+    ``extract_cells`` does, then forward-fill each document's cells as
+    they arrive, in ``(seq, order)`` order, emitting on the trigger
+    column — ``assemble_rows``' rows and schema without its shuffle."""
+    compiled = compile_rules(config.rules)
+    names = config.output_columns()
+    n = config.nr_of_columns
+    trigger = n - 1
+    columns = ["doc_id", "seq", *names]
+    schema = StructType(
+        [StructField("doc_id", StringType()), StructField("seq", LongType())]
+        # assemble_rows' coalesce with a literal makes rendered columns non-null.
+        + [StructField(name, StringType(), nullable=missing_value is None) for name in names]
+    )
+
+    def render(state: list[str | None]) -> list[str | None]:
+        if missing_value is None:
+            return state
+        return [value or missing_value for value in state]  # null or "" → missing
+
+    def fill(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows: list[tuple] = []
+            current = state = None
+            for doc_id, frag, cells in _evaluate_fragments(pdf, compiled, in_subset):
+                if state is None or doc_id != current:
+                    current, state = doc_id, [None] * n
+                for order, value in cells:
+                    state[order] = value
+                    if order == trigger:
+                        rows.append((doc_id, frag.seq, *render(state)))
+            yield pd.DataFrame.from_records(rows, columns=columns).astype({"seq": "int64"})
+
+    return docs.mapInPandas(fill, schema=schema)
+
+
 def extract(
     docs: DataFrame,
     config: ExtractionConfig,
@@ -174,16 +248,30 @@ def extract(
 ) -> DataFrame:
     """Full pipeline: documents(doc_id, content) → assembled output rows.
 
-    Returns DataFrame[doc_id, seq, <output columns>] — row order within a
-    document follows document order via ``seq``; use
-    ``sinks.write_reference_format`` for the delimited-text sink.
+    Returns DataFrame[doc_id, seq, <output columns>] with every
+    document's rows in one partition, contiguous and in ``seq``
+    (document) order; use ``sinks.write_reference_format`` for the
+    delimited-text sink of rows in any layout. When every XPath is in
+    the subset the plan has no shuffle; otherwise the JVM cells are
+    assembled by ``assemble_rows``' window.
     """
+    in_subset, on_jvm = _route(config)
+    if not any(on_jvm):
+        return _fill_rows(docs, config, in_subset, missing_value)
     return assemble_rows(
         extract_cells(docs, config),
         config.nr_of_columns,
         column_names=config.output_columns(),
         missing_value=missing_value,
     )
+
+
+def extract_lines(docs: DataFrame, config: ExtractionConfig) -> DataFrame:
+    """documents → the reference-format lines ``run_extraction`` writes,
+    one per output row, in ``extract``'s layout: each document's lines in
+    one partition, in document order, as each reference reducer writes
+    them to its own part file."""
+    return extract(docs, config).select(reference_line(config))
 
 
 def run_extraction(
@@ -197,12 +285,11 @@ def run_extraction(
     read XML documents from ``input_path``, apply the Hadoop-resource
     config at ``config_path``, write delimited text to ``output_path``.
     """
-    from hadoopxmlextractor_spark.sinks import write_reference_format
     from hadoopxmlextractor_spark.sources import read_xml_documents
 
     config = ExtractionConfig.from_hadoop_xml(config_path)
-    result = extract(read_xml_documents(spark, input_path), config)
-    write_reference_format(result, config, output_path)
+    lines = extract_lines(read_xml_documents(spark, input_path), config)
+    lines.write.mode("overwrite").text(output_path)
 
 
 def malformed_fragments(

@@ -20,6 +20,8 @@ batch; there is no hot loop over corpus bytes.
 
 from __future__ import annotations
 
+import warnings
+
 # --- GF(2^8) tables -------------------------------------------------------
 
 _EXP = [0] * 510
@@ -175,11 +177,23 @@ except Exception:  # pragma: no cover - env without cryptography
 # the same rust-side context constructor the public API uses. The
 # private binding is version-fragile by nature, so it is gated on a
 # load-time known-answer cross-check against the PUBLIC API for every
-# key size and both directions; any mismatch or import error falls
-# back to the public path. Results are byte-identical by construction.
+# key size and both directions, and tried only on the cryptography
+# releases it was checked against; any mismatch, import error or other
+# release falls back to the public path with one RuntimeWarning (the
+# module body runs once per process). Results are byte-identical by
+# construction.
+_CRYPTOGRAPHY_RANGE = ((48, 0), (49, 0))  # [lowest, first unchecked) (major, minor)
 _fast_ctx = None
 if _Cipher is not None:
     try:
+        import cryptography as _cryptography
+
+        _version = tuple(int(p) for p in _cryptography.__version__.split(".")[:2])
+        if not _CRYPTOGRAPHY_RANGE[0] <= _version < _CRYPTOGRAPHY_RANGE[1]:
+            raise RuntimeError(
+                f"cryptography {_cryptography.__version__} is outside the checked "
+                f"range {_CRYPTOGRAPHY_RANGE}"
+            )
         from cryptography.hazmat.bindings._rust import (  # type: ignore
             openssl as _rust_openssl,
         )
@@ -229,8 +243,13 @@ if _Cipher is not None:
                         != _refc.update(_pt) + _refc.finalize()):
                     raise RuntimeError("fast AES ctx self-check failed")
         _fast_ctx = (_fast_cbc, _fast_ecb)
-    except Exception:  # pragma: no cover - binding layout changed
+    except Exception as _e:  # binding layout changed or unchecked release
         _fast_ctx = None
+        warnings.warn(
+            f"AES fast path disabled, using the public cryptography API: {_e!r}",
+            RuntimeWarning,
+            stacklevel=2,
+        )
 
 
 def _cbc_encrypt_pure(key: bytes, iv: bytes, plaintext: bytes) -> bytes:

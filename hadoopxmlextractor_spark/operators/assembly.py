@@ -1,4 +1,4 @@
-"""Ordered pivot + forward fill + trigger-gated emit.
+"""Ordered pivot + forward fill + trigger-gated emit over arbitrary cells.
 
 The reference's Reduce (``XmlExtractor.java:150-175``) keeps one
 ``theColumns[nr_of_columns]`` array per document group, assigns
@@ -7,7 +7,13 @@ order, and emits a row every time the highest-order column arrives;
 earlier columns persist across emits (forward fill of hierarchical
 context), never-assigned columns render as a single space.
 
-Spark formulation — chosen for the SAME shuffle shape as the reference
+``extract.extract`` does this fill inside its Python pass when every
+XPath is in the ``xpath_subset`` subset, since that pass already holds
+each whole document. This window is for the rest: the extraction path
+where some XPath goes to the JVM ``xpath()``, and cells from any other
+source, which need not arrive grouped or ordered by document.
+
+Spark formulation — the SAME shuffle shape as the reference
 (partition by doc, sort within partition by (seq, order), stream once):
 
     cells(doc_id, seq, order, value)
@@ -20,10 +26,11 @@ Spark formulation — chosen for the SAME shuffle shape as the reference
 Exactly ONE shuffle (the window's hash partition by doc_id + sort within
 partitions), mirroring the reference's single MR shuffle
 (``XmlReducerPartitioner.java:12-20`` + ``XmlReducerKeySortComparator.java:14-28``).
-At 100 TB this scales with the number of documents — doc_id is a
-high-cardinality key, so the hash partitioning is balanced and the
-running-window state per partition is O(nr_of_columns), same as the
-reference's reducer memory bound.
+The output keeps that layout: every document's rows sit in one
+partition, contiguous and in ``seq`` order. At 100 TB this scales with
+the number of documents — doc_id is a high-cardinality key, so the hash
+partitioning is balanced and the running-window state per partition is
+O(nr_of_columns), same as the reference's reducer memory bound.
 """
 
 from __future__ import annotations
@@ -55,35 +62,28 @@ def assemble_rows(
     if len(names) != nr_of_columns:
         raise ValueError("column_names length must equal nr_of_columns")
 
+    # Positional names inside the plan, the caller's only on the output,
+    # so a column named "order" or "a.b" cannot clash or misparse.
+    pos = [f"_c{i}" for i in range(nr_of_columns)]
     sparse = cells.select(
         "doc_id",
         "seq",
         "order",
-        *[
-            F.when(F.col("order") == i, F.col("value")).alias(names[i])
-            for i in range(nr_of_columns)
-        ],
+        *[F.when(F.col("order") == i, F.col("value")).alias(pos[i]) for i in range(nr_of_columns)],
     )
     w = (
         Window.partitionBy("doc_id")
         .orderBy("seq", "order")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    filled = [F.last(names[i], ignorenulls=True).over(w).alias(names[i]) for i in range(nr_of_columns)]
+    filled = [F.last(c, ignorenulls=True).over(w).alias(c) for c in pos]
     out = (
         sparse.select("doc_id", "seq", "order", *filled)
         # Emit exactly when the highest-order column arrives
         # (XmlExtractor.java:159); its absence suppresses the row (§2.2-6).
         .filter(F.col("order") == nr_of_columns - 1)
-        .drop("order")
     )
+    rendered = [F.col(c) for c in pos]
     if missing_value is not None:
-        out = out.select(
-            "doc_id",
-            "seq",
-            *[
-                F.coalesce(F.nullif(F.col(n), F.lit("")), F.lit(missing_value)).alias(n)
-                for n in names
-            ],
-        )
-    return out
+        rendered = [F.coalesce(F.nullif(c, F.lit("")), F.lit(missing_value)) for c in rendered]
+    return out.select("doc_id", "seq", *[c.alias(n) for c, n in zip(rendered, names)])

@@ -3,20 +3,25 @@ delimiter via TextOutputFormat (``XmlExtractor.java:158-172, 206``)."""
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from hadoopxmlextractor_spark.config import ExtractionConfig
 
 
-def to_reference_lines(result: DataFrame, config: ExtractionConfig) -> DataFrame:
-    """Assembled rows → single-column DataFrame of reference-format lines:
-    every column followed by the output delimiter, including the last
-    (``XmlExtractor.java:160-170``)."""
-    cols = config.output_columns()
-    line = F.concat(
-        *[F.concat(F.col(c), F.lit(config.output_delimiter)) for c in cols]
+def reference_line(config: ExtractionConfig) -> Column:
+    """An assembled row's reference-format line, as column ``value``:
+    every output column followed by the output delimiter, including the
+    last (``XmlExtractor.java:160-170``)."""
+    return F.concat(
+        *[F.concat(F.col(c), F.lit(config.output_delimiter)) for c in config.output_columns()]
     ).alias("value")
+
+
+def to_reference_lines(result: DataFrame, config: ExtractionConfig) -> DataFrame:
+    """Assembled rows in any layout → single-column DataFrame of
+    reference-format lines (``reference_line``), each document's lines
+    in one partition and in ``seq`` order."""
     # The reference guarantees per-document order within a reducer's
     # output file, never a total order across files (each reducer
     # writes its own part-r-NNNNN). repartition + sortWithinPartitions
@@ -26,7 +31,7 @@ def to_reference_lines(result: DataFrame, config: ExtractionConfig) -> DataFrame
     return (
         result.repartition("doc_id")
         .sortWithinPartitions("doc_id", "seq")
-        .select(line)
+        .select(reference_line(config))
     )
 
 

@@ -7,7 +7,7 @@ in a directory are extracted continuously.
 Design: ``foreachBatch`` applying the batch ``extract()`` per
 micro-batch. This is *exactly* correct (not an approximation) because
 the unit of work is one whole document — a document never spans files,
-so the forward-fill window state never crosses micro-batch boundaries.
+so the forward-fill state never crosses micro-batch boundaries.
 No watermark or stateful operator is needed for parity; the windowed /
 stateful event operators live in ``streaming.events``.
 """

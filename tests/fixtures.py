@@ -88,3 +88,9 @@ INVENTORY_CONFIG_XML = """<?xml version="1.0"?>
 BOOK_CONFIG_XML = INVENTORY_CONFIG_XML.replace(
     "<value>book;true;false; ;4#", "<value>book;true;false;bk106;4#"
 )
+
+# The inventory config with its phone XPath outside the xpath_subset
+# subset (child:: axis), so extraction takes the JVM xpath() path.
+MIXED_CONFIG_XML = INVENTORY_CONFIG_XML.replace(
+    "1#//address/phone/text()", "1#//address/child::phone/text()"
+)

@@ -7,6 +7,7 @@ against its own encrypt mirror."""
 from __future__ import annotations
 
 import hashlib
+import importlib.util
 
 import pytest
 
@@ -160,3 +161,26 @@ def test_fast_path_equals_pure_python():
     bad = ct[:-1] + bytes([ct[-1] ^ 0x55])
     with pytest.raises(ValueError):
         A.cbc_decrypt(KEY, bytes(16), bad)
+
+
+def test_fast_path_is_active_when_cryptography_imports():
+    """The fast path must not fall back silently on the pinned release:
+    its version sits in the checked range and the self-check passed."""
+    cryptography = pytest.importorskip("cryptography")
+    version = tuple(int(p) for p in cryptography.__version__.split(".")[:2])
+    lo, hi = A._CRYPTOGRAPHY_RANGE
+    assert lo <= version < hi, cryptography.__version__
+    assert A._fast_ctx is not None
+
+
+def test_fast_path_outside_checked_range_warns_and_falls_back(monkeypatch):
+    cryptography = pytest.importorskip("cryptography")
+    monkeypatch.setattr(cryptography, "__version__", "1.0.0")
+    spec = importlib.util.spec_from_file_location("_aes_unchecked_release", A.__file__)
+    mod = importlib.util.module_from_spec(spec)
+    with pytest.warns(RuntimeWarning, match="AES fast path disabled"):
+        spec.loader.exec_module(mod)
+    assert mod._fast_ctx is None
+    iv = bytes(range(16))
+    assert mod.cbc_encrypt(KEY, iv, b"x" * 20) == A._cbc_encrypt_pure(KEY, iv, b"x" * 20)
+    assert mod.cbc_decrypt(KEY, iv, A.cbc_encrypt(KEY, iv, b"y" * 33)) == b"y" * 33

@@ -3,6 +3,8 @@ configs over the synthesized two-store corpus must reproduce the derived
 golden outputs — 30 rows for ExtractInventory, 4 rows for ExtractBook.
 """
 
+import os
+
 import pytest
 
 from hadoopxmlextractor_spark import xpath_subset
@@ -13,6 +15,7 @@ from hadoopxmlextractor_spark.extract import (
     malformed_fragments,
     run_extraction,
 )
+from hadoopxmlextractor_spark.operators.assembly import assemble_rows
 from hadoopxmlextractor_spark.plans import executed_plan
 from hadoopxmlextractor_spark.sinks import to_reference_lines
 from hadoopxmlextractor_spark.sources import docs_from_strings
@@ -20,6 +23,7 @@ from tests.fixtures import (
     BANKS,
     BOOK_CONFIG_XML,
     INVENTORY_CONFIG_XML,
+    MIXED_CONFIG_XML,
     SOHO,
     golden_rows,
     make_store_xml,
@@ -122,6 +126,80 @@ def test_run_extraction_files_roundtrip(spark, tmp_path):
     )
 
 
+@pytest.mark.parametrize("config_xml", [INVENTORY_CONFIG_XML, MIXED_CONFIG_XML],
+                         ids=["all_subset", "mixed"])
+def test_run_extraction_keeps_each_document_contiguous_in_one_part_file(
+    spark, tmp_path, config_xml
+):
+    # The reference's output contract: every document's lines in one
+    # part file, contiguous and in document order. Small input splits
+    # put several documents in one task, so one part file holds several
+    # documents on the all-subset path too.
+    stores = [
+        (f"Store{i}", f"{1000 + i}", (SOHO if i % 2 else BANKS)[2][: 1 + i % 2])
+        for i in range(8)
+    ]
+    in_dir = tmp_path / "in"
+    in_dir.mkdir()
+    for name, phone, inventories in stores:
+        (in_dir / f"{name}.xml").write_text(make_store_xml((name, phone, inventories)))
+    cfg_path = tmp_path / "config.xml"
+    cfg_path.write_text(config_xml)
+    out_dir = tmp_path / "out"
+    conf = {"spark.sql.files.openCostInBytes": "1", "spark.sql.files.maxPartitionBytes": "8k"}
+    old = {k: spark.conf.get(k) for k in conf}
+    for k, v in conf.items():
+        spark.conf.set(k, v)
+    try:
+        run_extraction(spark, str(in_dir), str(out_dir), str(cfg_path))
+    finally:
+        for k, v in old.items():
+            spark.conf.set(k, v)
+
+    parts = []
+    for name in sorted(os.listdir(out_dir)):
+        if name.startswith("part-"):
+            parts.append((out_dir / name).read_text().splitlines())
+    expected = {
+        store[0]: [";".join(row) + ";" for row in golden_rows([store])] for store in stores
+    }
+    seen = set()
+    for lines in parts:
+        # consecutive runs of one store name: one run per document
+        runs = []
+        for line in lines:
+            store = line.split(";", 1)[0]
+            if not runs or runs[-1][0] != store:
+                runs.append((store, []))
+            runs[-1][1].append(line)
+        for store, doc_lines in runs:
+            assert store not in seen, f"{store} split across runs or part files"
+            seen.add(store)
+            assert doc_lines == expected[store]
+    assert seen == set(expected)
+    assert max(len(set(line.split(";", 1)[0] for line in lines)) for lines in parts) > 1
+
+
+def test_column_names_on_all_subset_path_match_the_window(spark, docs):
+    # Names the positional plan would clash with ("order") or that are
+    # not identifiers ("store name") work on both assembly paths.
+    cfg = ExtractionConfig.from_rules(
+        [
+            ExtractionConfig.parse_rule("store", "store;true;false; ;0#//store/@name;", ";", "#"),
+            ExtractionConfig.parse_rule("book", "book;true;false; ;1#//book/@id;", ";", "#"),
+        ],
+        nr_of_columns=2,
+        column_names=("store name", "order"),
+    )
+    assert _in_subset(cfg)
+    got = extract(docs, cfg)
+    window = assemble_rows(extract_cells(docs, cfg), 2, column_names=["store name", "order"])
+    assert got.columns == ["doc_id", "seq", "store name", "order"]
+    assert got.schema == window.schema
+    assert _result_rows(got) == _result_rows(window)
+    assert _result_rows(got) == [(r[0], r[4]) for r in golden_rows([BANKS]) + golden_rows([SOHO])]
+
+
 def test_multi_node_xpath_concatenates(spark):
     # Several matched nodes concatenate with no separator
     # (XmlExtractor.java:105-109).
@@ -192,11 +270,8 @@ def test_auto_path_selection():
 def test_mixed_config_sends_only_out_of_subset_xpaths_to_jvm(spark, docs, all_jvm):
     # One XPath outside the subset routes only its own rule's fragments
     # to the JVM; every other XPath stays in the Python pass.
-    mixed_xml = INVENTORY_CONFIG_XML.replace(
-        "1#//address/phone/text();", "1#//address/child::phone/text();"
-    )
-    assert mixed_xml != INVENTORY_CONFIG_XML
-    mixed = ExtractionConfig.from_hadoop_xml(mixed_xml, is_text=True)
+    assert MIXED_CONFIG_XML != INVENTORY_CONFIG_XML
+    mixed = ExtractionConfig.from_hadoop_xml(MIXED_CONFIG_XML, is_text=True)
     assert not _in_subset(mixed)
 
     out = extract(docs, mixed)

@@ -51,22 +51,45 @@ def test_extraction_assembly_single_shuffle(spark):
     assert count_exchanges(assemble_rows(cells, 2)) == 1
 
 
-def test_all_subset_extraction_is_one_python_pass_and_one_shuffle(spark):
-    # Every XPath of the reference config is in the subset: the plan is
-    # MapInPandas → Exchange → Window, with no JVM xpath projection and
-    # no explode of its per-rule cell arrays.
+def _extraction_plans(spark, config_xml):
+    """Executed plans of ``extract()`` and of the lines ``run_extraction``
+    writes, over one store document."""
     from hadoopxmlextractor_spark.config import ExtractionConfig
-    from hadoopxmlextractor_spark.extract import extract
+    from hadoopxmlextractor_spark.extract import extract, extract_lines
     from hadoopxmlextractor_spark.sources import docs_from_strings
-    from tests.fixtures import INVENTORY_CONFIG_XML, SOHO, make_store_xml
+    from tests.fixtures import SOHO, make_store_xml
 
-    cfg = ExtractionConfig.from_hadoop_xml(INVENTORY_CONFIG_XML, is_text=True)
-    out = extract(docs_from_strings(spark, {"d": make_store_xml(SOHO)}), cfg)
-    plan = executed_plan(out)
-    assert count_exchanges(out) == 1
-    assert "MapInPandas" in plan
-    assert "Generate" not in plan
-    assert "XPathListEvaluator" not in plan
+    cfg = ExtractionConfig.from_hadoop_xml(config_xml, is_text=True)
+    docs = docs_from_strings(spark, {"d": make_store_xml(SOHO)})
+    return [extract(docs, cfg), extract_lines(docs, cfg)]
+
+
+def test_all_subset_extraction_is_one_python_pass_and_no_shuffle(spark):
+    # Every XPath of the reference config is in the subset: the Python
+    # pass forward-fills each document itself, so neither the rows nor
+    # the written lines need an Exchange, a Window, a JVM xpath
+    # projection or an explode of its per-rule cell arrays.
+    from tests.fixtures import INVENTORY_CONFIG_XML
+
+    for df in _extraction_plans(spark, INVENTORY_CONFIG_XML):
+        plan = executed_plan(df)
+        assert count_exchanges(df) == 0
+        assert plan.count("MapInPandas") == 1
+        assert "Window" not in plan
+        assert "Generate" not in plan
+        assert "XPathListEvaluator" not in plan
+
+
+def test_mixed_extraction_keeps_one_shuffle(spark):
+    # child:: is outside the subset, so the phone XPath goes to the JVM
+    # and the window assembles the cells; the sink adds no second shuffle.
+    from tests.fixtures import MIXED_CONFIG_XML
+
+    for df in _extraction_plans(spark, MIXED_CONFIG_XML):
+        plan = executed_plan(df)
+        assert count_exchanges(df) == 1
+        assert "Window" in plan
+        assert "MapInPandas" in plan
 
 
 def test_salted_agg_matches_plain(spark):

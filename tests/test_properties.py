@@ -219,6 +219,121 @@ def test_scanner_never_crashes_on_garbage(s):
         ET.fromstring(f.xml)  # validated fragments always parse
 
 
+# XPaths of each rule of the forward-fill cases, all in the subset; the
+# @nope XPath never matches, and id/qty may be empty strings.
+_FILL_XPATHS = {
+    "store": ("//store/@name",),
+    "inventory": ("//inventory/@month", "//inventory/@nope"),
+    "item": ("//item/@id", "//item/@qty", "//item/n/text()"),
+}
+_value = st.text(alphabet="ab", max_size=2)
+
+
+@st.composite
+def _fill_doc(draw):
+    """A store document whose items carry children (their rule includes
+    them), some with an unclosed child that makes the fragment malformed;
+    or one without its store element, whose store column the previous
+    document must not fill; or a document with no fragment at all."""
+    if draw(st.integers(0, 5)) == 0:
+        return "<other>no fragments</other>"
+    store = draw(st.booleans())
+    parts = [f'<store name="{draw(_value)}">' if store else "<other>"]
+    for _ in range(draw(st.integers(0, 2))):
+        parts.append(f'<inventory month="{draw(_value)}">')
+        for _ in range(draw(st.integers(0, 3))):
+            body = f"<n>{draw(_value)}</n>" if draw(st.booleans()) else "<n>unclosed"
+            parts.append(f'<item id="{draw(_value)}" qty="{draw(_value)}">{body}</item>')
+        parts.append("</inventory>")
+    parts.append("</store>" if store else "</other>")
+    return "".join(parts)
+
+
+@st.composite
+def _fill_case(draw):
+    """(documents, nr_of_columns, rules, missing_value); each rule is
+    (name, ((order, xpath), ...)) in declaration order. Orders are
+    distinct within a rule (the window breaks ties arbitrarily) but may
+    repeat across rules, and may be declared out of order."""
+    n = draw(st.integers(1, 5))
+    rules = []
+    for name, pool in _FILL_XPATHS.items():
+        xpaths = draw(st.lists(st.sampled_from(pool), unique=True, max_size=min(len(pool), n)))
+        orders = draw(st.permutations(range(n)))[: len(xpaths)]
+        rules.append((name, tuple(zip(orders, xpaths))))
+    docs = tuple(draw(st.lists(_fill_doc(), max_size=6)))
+    return docs, n, tuple(rules), draw(st.sampled_from([" ", None]))
+
+
+def _fill_config(n, rules):
+    return ExtractionConfig.from_rules(
+        [
+            ExtractionConfig.parse_rule(
+                name,
+                f"{name};true;{'true' if name == 'item' else 'false'}; ;"
+                + "".join(f"{order}#{xp};" for order, xp in xpaths),
+                ";",
+                "#",
+            )
+            for name, xpaths in rules
+        ],
+        nr_of_columns=n,
+    )
+
+
+@given(_fill_case())
+@settings(max_examples=25, deadline=None, suppress_health_check=[HealthCheck.too_slow])
+@example((
+    (
+        '<store name="s"><inventory month="">'
+        '<item id="i1" qty=""><n>x</n></item><item id="i2" qty="2"><n>unclosed</item>'
+        '<item id="" qty="3"><n>y</n></item></inventory></store>',
+        '<other><inventory month="m"><item id="i4" qty="4"><n>z</n></item>'
+        "</inventory></other>",
+        "<other>no fragments</other>",
+    ),
+    6,
+    (
+        ("store", ((0, "//store/@name"),)),
+        ("inventory", ((2, "//inventory/@month"), (1, "//inventory/@nope"))),
+        ("item", ((5, "//item/@qty"), (4, "//item/@id"), (2, "//item/n/text()"))),
+    ),
+    " ",
+))
+def test_extract_forward_fill_equals_window_assembly(spark, case):
+    """On all-subset configs, ``extract``'s in-pass forward fill returns
+    the rows and schema of the window assembly over ``extract_cells``,
+    with every document's rows in ``seq`` order, also when Arrow batch
+    boundaries fall between the documents of one task."""
+    from hadoopxmlextractor_spark.extract import extract, extract_cells
+    from hadoopxmlextractor_spark.operators.assembly import assemble_rows
+
+    docs, n, rules, missing_value = case
+    cfg = _fill_config(n, rules)
+    assert all(compile_subset(xp.expr) for rule in cfg.rules for xp in rule.xpaths)
+    frame = spark.createDataFrame(
+        [(f"d{i}", doc) for i, doc in enumerate(docs)], "doc_id string, content string"
+    ).coalesce(1)
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "2")
+    try:
+        got = extract(frame, cfg, missing_value=missing_value)
+        oracle = assemble_rows(
+            extract_cells(frame, cfg), n, column_names=cfg.output_columns(),
+            missing_value=missing_value,
+        )
+        assert got.schema == oracle.schema
+        got_rows = [tuple(r) for r in got.collect()]
+        oracle_rows = [tuple(r) for r in oracle.collect()]
+    finally:
+        spark.conf.set(key, old)
+    assert sorted(got_rows, key=lambda r: r[:2]) == sorted(oracle_rows, key=lambda r: r[:2])
+    for doc_id in {r[0] for r in got_rows}:
+        seqs = [r[1] for r in got_rows if r[0] == doc_id]
+        assert seqs == sorted(seqs)
+
+
 @given(
     st.lists(
         st.lists(st.integers(min_value=0, max_value=40), min_size=0, max_size=60),

@@ -166,10 +166,13 @@ REFERENCE = {
 }
 
 
-def build_spark():
+def build_spark(event_log_dir: str | None = None):
+    """The bench session. With ``event_log_dir`` it also writes an event
+    log there, uncompressed and unrolled (Spark 4 defaults to rolled,
+    zstd-compressed logs), for ``scripts/profile_queries.read_task_ends``."""
     from pyspark.sql import SparkSession
 
-    return (
+    builder = (
         SparkSession.builder.master(f"local[{CPUS}]")
         .appName("hadoopxmlextractor-spark-bench")
         .config("spark.sql.shuffle.partitions", str(CPUS))
@@ -178,8 +181,15 @@ def build_spark():
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
-        .getOrCreate()
     )
+    if event_log_dir is not None:
+        builder = (
+            builder.config("spark.eventLog.enabled", "true")
+            .config("spark.eventLog.dir", f"file://{os.path.abspath(event_log_dir)}")
+            .config("spark.eventLog.compress", "false")
+            .config("spark.eventLog.rolling.enabled", "false")
+        )
+    return builder.getOrCreate()
 
 
 def run_noop(df) -> None:

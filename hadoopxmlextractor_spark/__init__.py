@@ -7,7 +7,9 @@ Layers
   XML fragment extraction — the reference's scan → filter → XPath-project →
   ordered pivot + forward fill pipeline (reference:
   ``src/main/java/HadoopXmlExtractor/XmlExtractor.java:150-175``) expressed
-  as a DataFrame plan with exactly one shuffle.
+  as a DataFrame plan. When every XPath is in the Python subset it is one
+  ``mapInPandas`` pass with no shuffle; when some XPath needs the JVM, the
+  window that assembles its cells adds one.
 - **Analytics surface** (``operators``, ``queries*``): typed DataFrame
   operators — joins, aggregations, windows, set ops, dedup, similarity
   search, text analysis — all built on ``pyspark.sql`` so Catalyst/AQE

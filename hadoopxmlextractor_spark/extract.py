@@ -200,9 +200,7 @@ def extract_cells(docs: DataFrame, config: ExtractionConfig) -> DataFrame:
     )
 
 
-def _fill_rows(
-    docs: DataFrame, config: ExtractionConfig, in_subset: _Evaluators, missing_value: str | None
-) -> DataFrame:
+def _fill_rows(docs: DataFrame, config: ExtractionConfig, in_subset: _Evaluators) -> DataFrame:
     """documents → assembled rows in one Python pass, for a config whose
     XPaths are all in the subset: scan, parse and evaluate as
     ``extract_cells`` does, then forward-fill each document's cells as
@@ -216,13 +214,8 @@ def _fill_rows(
     schema = StructType(
         [StructField("doc_id", StringType()), StructField("seq", LongType())]
         # assemble_rows' coalesce with a literal makes rendered columns non-null.
-        + [StructField(name, StringType(), nullable=missing_value is None) for name in names]
+        + [StructField(name, StringType(), nullable=False) for name in names]
     )
-
-    def render(state: list[str | None]) -> list[str | None]:
-        if missing_value is None:
-            return state
-        return [value or missing_value for value in state]  # null or "" → missing
 
     def fill(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -234,18 +227,14 @@ def _fill_rows(
                 for order, value in cells:
                     state[order] = value
                     if order == trigger:
-                        rows.append((doc_id, frag.seq, *render(state)))
+                        # null or "" renders as the reference's " "
+                        rows.append((doc_id, frag.seq, *[cell or " " for cell in state]))
             yield pd.DataFrame.from_records(rows, columns=columns).astype({"seq": "int64"})
 
     return docs.mapInPandas(fill, schema=schema)
 
 
-def extract(
-    docs: DataFrame,
-    config: ExtractionConfig,
-    *,
-    missing_value: str | None = " ",
-) -> DataFrame:
+def extract(docs: DataFrame, config: ExtractionConfig) -> DataFrame:
     """Full pipeline: documents(doc_id, content) → assembled output rows.
 
     Returns DataFrame[doc_id, seq, <output columns>] with every
@@ -257,12 +246,9 @@ def extract(
     """
     in_subset, on_jvm = _route(config)
     if not any(on_jvm):
-        return _fill_rows(docs, config, in_subset, missing_value)
+        return _fill_rows(docs, config, in_subset)
     return assemble_rows(
-        extract_cells(docs, config),
-        config.nr_of_columns,
-        column_names=config.output_columns(),
-        missing_value=missing_value,
+        extract_cells(docs, config), config.nr_of_columns, column_names=config.output_columns()
     )
 
 

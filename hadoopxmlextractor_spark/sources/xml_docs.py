@@ -9,9 +9,10 @@ task natively (``spark.sql.files.maxPartitionBytes`` /
 SequenceFiles remain readable for drop-in parity.
 
 Whole-file reads are inherently non-splittable, which preserves the
-intra-document order the scanner's ``seq`` offsets rely on; skew from one
-giant document is mitigated downstream by exploding fragments before the
-expensive projection (see ``extract.py``).
+intra-document order the scanner's ``seq`` offsets rely on. The scan,
+parse and projection then run in the same task that read the document
+(see ``extract.py``), so one giant document is one long task: its cost is
+linear in its length, but it is not spread over other tasks.
 """
 
 from __future__ import annotations

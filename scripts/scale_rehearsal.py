@@ -27,6 +27,7 @@ from __future__ import annotations
 import json
 import os
 import random
+import shutil
 import sys
 import time
 
@@ -80,7 +81,6 @@ def build_zipf_tables() -> None:
     import pyarrow.parquet as pq
 
     os.makedirs(OUT, exist_ok=True)
-    os.makedirs(EVLOG, exist_ok=True)
     for t in "region nation customer supplier part orders lineitem embeddings".split():
         dst = f"{OUT}/{t}.parquet"
         if not os.path.exists(dst):
@@ -158,7 +158,6 @@ def build_relational_tables() -> None:
     import pyarrow.parquet as pq
 
     os.makedirs(OUT, exist_ok=True)
-    os.makedirs(EVLOG, exist_ok=True)
     static = "region nation customer supplier part documents embeddings"
     for t in static.split():
         dst = f"{OUT}/{t}.parquet"
@@ -193,7 +192,6 @@ def build_tables() -> None:
         return
 
     os.makedirs(OUT, exist_ok=True)
-    os.makedirs(EVLOG, exist_ok=True)
     for t in (
         "region nation customer supplier part orders lineitem events".split()
     ):
@@ -234,66 +232,32 @@ def build_tables() -> None:
     )
 
 
-def stage_extremes() -> dict:
-    """Max task input / shuffle-read / peak-memory across all tasks in
-    the (single-application) event log, plus total task cpu vs wall."""
-    mx = {"max_task_input_mb": 0.0, "max_task_shuffle_read_mb": 0.0,
-          "max_task_peak_mem_mb": 0.0, "task_wall_s": 0.0, "task_cpu_s": 0.0}
-    paths = []
-    for root, _dirs, files in os.walk(EVLOG):
-        paths.extend(os.path.join(root, fn) for fn in files)
-    for path in paths:
-        if path.endswith((".zstd", ".lz4", ".snappy")) or "appstatus" in path:
-            continue
-        with open(path) as f:
-            for line in f:
-                if '"SparkListenerTaskEnd"' not in line:
-                    continue
-                try:
-                    ev = json.loads(line)
-                except json.JSONDecodeError:
-                    continue
-                tm = ev.get("Task Metrics") or {}
-                inp = (tm.get("Input Metrics") or {}).get("Bytes Read", 0)
-                sr = (tm.get("Shuffle Read Metrics") or {})
-                srb = sr.get("Local Bytes Read", 0) + sr.get("Remote Bytes Read", 0)
-                peak = tm.get("Peak Execution Memory", 0)
-                info = ev.get("Task Info") or {}
-                wall = (info.get("Finish Time", 0) - info.get("Launch Time", 0)) / 1e3
-                cpu = tm.get("Executor CPU Time", 0) / 1e9
-                mx["max_task_input_mb"] = max(mx["max_task_input_mb"], inp / 1e6)
-                mx["max_task_shuffle_read_mb"] = max(
-                    mx["max_task_shuffle_read_mb"], srb / 1e6
-                )
-                mx["max_task_peak_mem_mb"] = max(
-                    mx["max_task_peak_mem_mb"], peak / 1e6
-                )
-                mx["task_wall_s"] += wall
-                mx["task_cpu_s"] += cpu
-    return {k: round(v, 2) for k, v in mx.items()}
+def stage_extremes(tasks: list) -> dict:
+    """Max task input / shuffle-read / peak-memory across the TaskEnd
+    records of the run's event log, plus total task cpu vs wall."""
+    def mb(values) -> float:
+        return round(max(values, default=0) / 1e6, 2)
+
+    return {
+        "max_task_input_mb": mb(t.input_bytes for t in tasks),
+        "max_task_shuffle_read_mb": mb(t.shuffle_read_bytes for t in tasks),
+        "max_task_peak_mem_mb": mb(t.peak_memory_bytes for t in tasks),
+        "task_wall_s": round(sum(t.wall_s for t in tasks), 2),
+        "task_cpu_s": round(sum(t.cpu_s for t in tasks), 2),
+    }
 
 
 def main() -> None:
     build_tables()
 
-    from pyspark.sql import SparkSession
-
+    import bench
     from __spark_entry__ import queries
+    from scripts.profile_queries import read_task_ends
 
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("scale-rehearsal")
-        .config("spark.sql.shuffle.partitions", str(cpus))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.driver.memory", "16g")
-        .config("spark.ui.enabled", "false")
-        .config("spark.eventLog.enabled", "true")
-        .config("spark.eventLog.dir", f"file://{EVLOG}")
-        .config("spark.eventLog.compress", "false")
-        .config("spark.eventLog.rolling.enabled", "false")
-        .getOrCreate()
-    )
+    # A fresh log per run: the numbers below must be this run's alone.
+    shutil.rmtree(EVLOG, ignore_errors=True)
+    os.makedirs(EVLOG)
+    spark = bench.build_spark(event_log_dir=EVLOG)
     spark.sparkContext.setLogLevel("ERROR")
 
     qs = queries()
@@ -316,9 +280,8 @@ def main() -> None:
         print(json.dumps({"query": name, "sec": round(dt, 2), "rows": n}))
         spark.catalog.clearCache()
     spark.stop()
-    time.sleep(2)  # let the event log flush
     print(json.dumps({"total_sec": round(total, 2), "factor": FACTOR,
-                      **stage_extremes()}))
+                      **stage_extremes(read_task_ends(EVLOG))}))
 
 
 if __name__ == "__main__":

@@ -251,7 +251,7 @@ def _fill_doc(draw):
 
 @st.composite
 def _fill_case(draw):
-    """(documents, nr_of_columns, rules, missing_value); each rule is
+    """(documents, nr_of_columns, rules); each rule is
     (name, ((order, xpath), ...)) in declaration order. Orders are
     distinct within a rule (the window breaks ties arbitrarily) but may
     repeat across rules, and may be declared out of order."""
@@ -262,7 +262,7 @@ def _fill_case(draw):
         orders = draw(st.permutations(range(n)))[: len(xpaths)]
         rules.append((name, tuple(zip(orders, xpaths))))
     docs = tuple(draw(st.lists(_fill_doc(), max_size=6)))
-    return docs, n, tuple(rules), draw(st.sampled_from([" ", None]))
+    return docs, n, tuple(rules)
 
 
 def _fill_config(n, rules):
@@ -298,7 +298,6 @@ def _fill_config(n, rules):
         ("inventory", ((2, "//inventory/@month"), (1, "//inventory/@nope"))),
         ("item", ((5, "//item/@qty"), (4, "//item/@id"), (2, "//item/n/text()"))),
     ),
-    " ",
 ))
 def test_extract_forward_fill_equals_window_assembly(spark, case):
     """On all-subset configs, ``extract``'s in-pass forward fill returns
@@ -308,7 +307,7 @@ def test_extract_forward_fill_equals_window_assembly(spark, case):
     from hadoopxmlextractor_spark.extract import extract, extract_cells
     from hadoopxmlextractor_spark.operators.assembly import assemble_rows
 
-    docs, n, rules, missing_value = case
+    docs, n, rules = case
     cfg = _fill_config(n, rules)
     assert all(compile_subset(xp.expr) for rule in cfg.rules for xp in rule.xpaths)
     frame = spark.createDataFrame(
@@ -318,11 +317,8 @@ def test_extract_forward_fill_equals_window_assembly(spark, case):
     old = spark.conf.get(key)
     spark.conf.set(key, "2")
     try:
-        got = extract(frame, cfg, missing_value=missing_value)
-        oracle = assemble_rows(
-            extract_cells(frame, cfg), n, column_names=cfg.output_columns(),
-            missing_value=missing_value,
-        )
+        got = extract(frame, cfg)
+        oracle = assemble_rows(extract_cells(frame, cfg), n, column_names=cfg.output_columns())
         assert got.schema == oracle.schema
         got_rows = [tuple(r) for r in got.collect()]
         oracle_rows = [tuple(r) for r in oracle.collect()]
